@@ -36,7 +36,7 @@ CHECKOUT = os.path.dirname(HERE)
 END_TO_END = {
     "setup_s": "s",
     "rss_peak_mb": "MB",
-    "throughput_per_s": "1/s",
+    "write_frames_per_s": "frames/s",
     "latency_p50_s": "s",
     "latency_p90_s": "s",
 }
@@ -73,11 +73,6 @@ def start_session(root: str, workload: str):
             "spark.driver.memory": "1g",
             "spark.sql.warehouse.dir": f"{root}/warehouse",
             "spark.local.dir": f"{root}/local",
-            # a fixed, pre-touched heap: the JVM heap is a constant share of
-            # rss_peak_mb instead of growing with GC timing, so the metric
-            # moves with what lives outside it (Python driver and workers,
-            # Arrow and other off-heap buffers)
-            "spark.driver.extraJavaOptions": "-Xms1g -XX:+AlwaysPreTouch",
             "spark.ui.showConsoleProgress": "false",
             "spark.ui.retainedJobs": "100000",
             "spark.ui.retainedStages": "100000",
@@ -170,7 +165,7 @@ def main(argv: list[str]) -> int:
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "window_s": round(res.window_s, 4), "samples": len(lat),
         "failed_frac": res.failed / max(1, res.attempted),
-        "throughput_per_s": res.throughput,
+        "write_frames_per_s": res.write_fps,
         "rss_jvm_mb": round(sampler.peak_jvm_kb / 1024.0, 1),
         "latency_p50_s": percentile(lat, 50),
         "latency_p90_s": percentile(lat, 90),

@@ -228,12 +228,13 @@ def _is_java(pid: int) -> bool:
 
 
 class RssSampler:
-    """Samples the resident memory of this process and its descendants
-    (JVM, Python workers) as a PSS sum, excluding pids in ``skip`` (the
-    load generator)."""
+    """Samples, every ``INTERVAL_S``, the resident memory of this process
+    and its descendants (JVM, Python workers) as a PSS sum, excluding
+    pids in ``skip`` (the load generator)."""
 
-    def __init__(self, interval: float = 0.5) -> None:
-        self.interval = interval
+    INTERVAL_S = 0.5
+
+    def __init__(self) -> None:
         self.skip: set[int] = set()
         self.peak_kb = 0
         self.peak_jvm_kb = 0  # the JVM's share at the peak
@@ -258,7 +259,7 @@ class RssSampler:
         return total
 
     def _run(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(self.INTERVAL_S):
             self.sample()
 
     def start(self) -> RssSampler:

@@ -10,7 +10,10 @@ scratch root) and returns a ``Result``.
 
 Both write through one streaming pipeline: ``stream_dir`` ->
 ``infer_detections`` -> ``threshold_filter`` -> foreachBatch
-``merge_into`` with an idempotency key per epoch.
+``merge_into`` with an idempotency key per epoch. Both time one
+saturated trigger of ``backlog_frames`` after the pipeline is warm: in
+``live`` a backlog file landed before the generator starts, in
+``query`` the second epoch of the store build.
 """
 
 from __future__ import annotations
@@ -44,21 +47,27 @@ CURATION = (
 )
 KEY_COLS = ["frame_id", "box_idx"]
 N_BUCKETS = 8
+# live: the generator's schedule. A lead-in of unmeasured files brings the
+# stream to steady state; a tail keeps files landing until a trigger has
+# picked up the last measured one
+LIVE_FILES_PER_S = 4.0
+LIVE_LEAD_S = 8.0
+LIVE_TAIL_S = 12.0
+# query: the store is built by this many epochs, one commit each
+BUILD_EPOCHS = 2
 
 
 @dataclass(frozen=True)
 class Sizes:
     payload_bytes: int = 2048
-    # live: files of a few frames at a fixed rate, after one warm-up
-    # trigger of warm_frames and a lead-in of live_lead_s
+    # live: files of a few frames, after one warm-up trigger of
+    # warm_frames and one backlog trigger of backlog_frames
     live_frames_per_file: int = 16
-    live_files_per_s: float = 4.0
-    live_lead_s: float = 12.0
-    live_tail_s: float = 30.0
     warm_frames: int = 256
+    # a backlog trigger (live) or build epoch (query) of this many frames
+    # is the timed saturated write
+    backlog_frames: int = 2048
     # query: store build and client mix
-    build_epochs: int = 2
-    build_frames_per_epoch: int = 2048
     retention_frames: int = 512
     lookup_keys: int = 16
     lookups_per_cycle: int = 4
@@ -69,9 +78,8 @@ class Sizes:
 
 
 TINY = Sizes(
-    payload_bytes=256, live_frames_per_file=4,
-    live_files_per_s=4.0, live_tail_s=30.0, warm_frames=32, build_epochs=2,
-    build_frames_per_epoch=128, retention_frames=32, lookup_keys=8,
+    payload_bytes=256, live_frames_per_file=4, warm_frames=32,
+    backlog_frames=128, retention_frames=32, lookup_keys=8,
     lookups_per_cycle=2, scans_per_cycle=1, n_docs=120, n_vecs=80,
     n_events=2000,
 )
@@ -98,7 +106,7 @@ class Bench:
 class Result:
     setup_end: float
     window_s: float
-    throughput: float  # frames/s or operations/s
+    write_fps: float  # frames/s of one saturated trigger after warm-up
     latencies: list[float]  # freshness or operation latency, seconds
     attempted: int
     failed: int
@@ -442,32 +450,41 @@ def _lookup_keys(b: Bench, rng: np.random.Generator, present: pd.DataFrame,
 # -- live ---------------------------------------------------------------------------
 
 
+def _land(hold: str, watch: str, name: str) -> float:
+    """Move a staged file into the watched directory; return when."""
+    os.rename(os.path.join(hold, name), os.path.join(watch, name))
+    return time.time()
+
+
 def live(b: Bench) -> Result:
     s = b.sizes
     hold, watch = f"{b.root}/hold", f"{b.root}/frames"
     store, ckpt = f"{b.root}/store", f"{b.root}/ckpt"
     os.makedirs(watch)
     warm = FrameFiles(b, 1, s.warm_frames, 10**9)
+    backlog = FrameFiles(b, 2, s.backlog_frames, 2 * 10**9)
     files = FrameFiles(b, 0, s.live_frames_per_file, 0)
-    # the generator lands lead-in files first, so the stream is in steady
-    # state when the measured files (those due in the next --seconds)
-    # start; it keeps landing files until a trigger has picked up the
-    # last measured one, so no measured file rides a final partial drain
-    n_lead = int(round(s.live_lead_s * s.live_files_per_s))
-    n_measured = max(2, int(round(b.seconds * s.live_files_per_s)))
-    n_files = n_lead + n_measured + int(s.live_tail_s * s.live_files_per_s)
+    # the measured files are those due in the --seconds after the lead-in
+    n_lead = int(round(LIVE_LEAD_S * LIVE_FILES_PER_S))
+    n_measured = max(2, int(round(b.seconds * LIVE_FILES_PER_S)))
+    n_files = n_lead + n_measured + int(round(LIVE_TAIL_S * LIVE_FILES_PER_S))
     names = files.stage(hold, range(n_files))
     measured = names[n_lead:n_lead + n_measured]
     warm.stage(hold, [0])
+    backlog.stage(hold, [0])
     _create_store(b, store)
     pipe = Pipeline(b, watch, store, ckpt)
     q = pipe.start(None, available_now=False)
     try:
         # warm-up trigger: JIT, worker start and codegen
-        os.rename(os.path.join(hold, warm.name(0)), os.path.join(watch, warm.name(0)))
+        _land(hold, watch, warm.name(0))
         _await_commits(q, pipe, [warm.name(0)], 150)
+        # one saturated trigger: the backlog file, landed -> committed
+        t_land = _land(hold, watch, backlog.name(0))
+        batches = _await_commits(q, pipe, [backlog.name(0)], 150)
+        write_s = pipe.commits[batches[backlog.name(0)]] - t_land
         stop = f"{b.root}/gen.stop"
-        interval = 1.0 / s.live_files_per_s
+        interval = 1.0 / LIVE_FILES_PER_S
         t_gen = time.time() + 0.2
         t_open = t_gen + n_lead * interval
         gen = subprocess.Popen(
@@ -479,7 +496,7 @@ def live(b: Bench) -> Result:
         with b.tracer.span("window", "bench") as window:
             try:
                 _await_picked(q, pipe, measured,
-                              s.live_lead_s + b.seconds + s.live_tail_s)
+                              LIVE_LEAD_S + b.seconds + LIVE_TAIL_S + 60)
             finally:
                 open(stop, "w").close()
                 out, _ = gen.communicate(timeout=60)
@@ -487,7 +504,7 @@ def live(b: Bench) -> Result:
                 raise RuntimeError(f"generator exited with {gen.returncode}")
             sent = [json.loads(line) for line in out.splitlines() if line]
             delivered = [r["name"] for r in sent]
-            batches = _await_commits(q, pipe, delivered, s.live_tail_s)
+            batches = _await_commits(q, pipe, delivered, 60)
         b.sampler.stop()
         progress = _await_progress(q, max(batches[n] for n in delivered))
     finally:
@@ -497,15 +514,10 @@ def live(b: Bench) -> Result:
     ok = [n for n in measured if batches.get(n) in pipe.commits]
     t_close = max(pipe.commits[batches[n]] for n in ok) if ok else time.time()
     lat = [pipe.commits[batches[n]] - due[n] for n in ok]
-    # committed frames per second of trigger execution, over the
-    # triggers that carried measured files
-    carried = {batches[n] for n in ok}
-    busy = sum(p["durationMs"]["triggerExecution"] for p in progress
-               if p["batchId"] in carried) / 1000.0
-    frames = sum(1 for n in delivered if batches.get(n) in carried) * files.n
     ks = [k for k in range(n_files) if files.name(k) in due]
-    expected = pd.concat([files.expected(ks), warm.expected([0])],
-                         ignore_index=True)
+    expected = pd.concat([files.expected(ks), warm.expected([0]),
+                          backlog.expected([0])], ignore_index=True)
+    attempted = len(ks) * files.n + warm.n + backlog.n
     failed = _store_failures(b, store, expected)
     failed |= {int(f) for k in ks
                if batches.get(files.name(k)) not in pipe.commits
@@ -514,18 +526,21 @@ def live(b: Bench) -> Result:
     # the files it delivered late
     failed |= {int(f) for k in ks if late[files.name(k)] > 1.0
                for f in files.ids(k)}
+    carried = {batches[n] for n in ok}
     if b.traced:
         window.update(start=t_open, end=t_close)
-        _stream_layers(b, pipe, progress, carried,
-                       len(ks) * files.n + warm.n, window)
+        _stream_layers(b, pipe, progress, carried, attempted, window)
         _store_layers(b, store, expected.iloc[: s.lookup_keys][KEY_COLS])
         b.layer["gen.late_max_s"] = max(late.values())
+    # set-up ends when the generator's schedule starts: the lead-in is a
+    # fixed part of that schedule, not work the program does
     return Result(
-        setup_end=t_open, window_s=t_close - t_open,
-        throughput=frames / max(busy, 1e-9), latencies=lat,
-        attempted=len(ks) * files.n + warm.n, failed=len(failed),
+        setup_end=t_gen, window_s=t_close - t_open,
+        write_fps=backlog.n / write_s, latencies=lat,
+        attempted=attempted, failed=len(failed),
         detail={"measured_files": len(measured), "delivered_files": len(ks),
-                "frames_per_file": files.n, "files_per_s": s.live_files_per_s,
+                "frames_per_file": files.n, "files_per_s": LIVE_FILES_PER_S,
+                "lead_in_s": n_lead * interval, "write_s": round(write_s, 4),
                 "triggers_measured": len(carried),
                 "gen_late_max_s": round(max(late.values()), 4)},
     )
@@ -593,18 +608,22 @@ def query(b: Bench) -> Result:
     inputs.write_curation_tables(sf, b.seed, s.n_docs, s.n_vecs, s.n_events)
 
     # store: one merge_into commit per epoch of the streaming pipeline
-    files = FrameFiles(b, 0, s.build_frames_per_epoch, 0)
-    ks = range(s.build_epochs)
-    files.stage(watch, ks)
+    files = FrameFiles(b, 0, s.backlog_frames, 0)
+    ks = range(BUILD_EPOCHS)
+    names = files.stage(watch, ks)
     _create_store(b, store)
     pipe = Pipeline(b, watch, store, ckpt)
     drain_or_raise(pipe.start(1, available_now=True), 170, "store build")
+    # the first epoch warms the pipeline; the second is the timed
+    # saturated trigger, from the first commit's return to its own
+    epochs = [pipe.log.read()[n] for n in names]
+    write_s = pipe.commits[epochs[1]] - pipe.commits[epochs[0]]
     expected = files.expected(ks)
     gone = expected["frame_id"] < s.retention_frames
     deleted, present = expected[gone], expected[~gone].reset_index(drop=True)
     delete_keys(spark, store, spark.createDataFrame(deleted[KEY_COLS]),
                 idempotency_key="retention")
-    hi = int(files.ids(s.build_epochs - 1)[-1]) + 1
+    hi = int(files.ids(BUILD_EPOCHS - 1)[-1]) + 1
     want_counts = inputs.per_label_counts(present)
 
     def lookup(keys: pd.DataFrame):
@@ -722,11 +741,12 @@ def query(b: Bench) -> Result:
         _query_layers(b, pipe, status, ops_done, store, warm_keys, s)
     return Result(
         setup_end=t_open, window_s=window_s,
-        throughput=len(ops_done) / window_s,
+        write_fps=files.n / write_s,
         latencies=[r["s"] for r in ops_done],
         attempted=len(checked), failed=failed,
         detail={
             "ops": len(ops_done), "cycles": cycle,
+            "ops_per_s": len(ops_done) / window_s, "write_s": round(write_s, 4),
             "lookup_p50_s": _med(by_kind.get("lookup", [])),
             "scan_p50_s": _med(by_kind.get("scan", [])),
             "curate_qps": len(by_kind.get("curate", []))
@@ -757,7 +777,7 @@ def _query_layers(b: Bench, pipe: Pipeline, status: SparkStatus,
     })
     _exec_layers(b, [in_range(*r["jobs"]) for r in ok])
     calls, secs, loads = (a.value for a in pipe.acc)
-    frames = s.build_epochs * s.build_frames_per_epoch
+    frames = BUILD_EPOCHS * s.backlog_frames
     b.layer.update({
         "inference.frames": frames,
         "inference.model_calls": calls,
