@@ -10,10 +10,10 @@ scratch root) and returns a ``Result``.
 
 Both write through one streaming pipeline: ``stream_dir`` ->
 ``infer_detections`` -> ``threshold_filter`` -> foreachBatch
-``merge_into`` with an idempotency key per epoch. Both time one
-saturated trigger of ``backlog_frames`` after the pipeline is warm: in
-``live`` a backlog file landed before the generator starts, in
-``query`` the second epoch of the store build.
+``merge_into`` with an idempotency key per epoch. Both time saturated
+triggers after the pipeline is warm: in ``live`` a backlog file landed
+before the generator starts, in ``query`` the later epochs of the store
+build.
 """
 
 from __future__ import annotations
@@ -48,26 +48,29 @@ CURATION = (
 KEY_COLS = ["frame_id", "box_idx"]
 N_BUCKETS = 8
 # live: the generator's schedule. A lead-in of unmeasured files brings the
-# stream to steady state; a tail keeps files landing until a trigger has
-# picked up the last measured one
+# stream to steady state
 LIVE_FILES_PER_S = 4.0
-LIVE_LEAD_S = 8.0
-LIVE_TAIL_S = 12.0
-# query: the store is built by this many epochs, one commit each
-BUILD_EPOCHS = 2
+LIVE_LEAD_S = 6.0
+# the pipeline's triggers keep getting faster over the first few, as the
+# JVM compiles its hot paths: write throughput is timed only after this
+# many warm-up triggers
+WARM_TRIGGERS = 2
+# query: the store is built by this many epochs, one commit each; those
+# after the warm-up are timed
+BUILD_EPOCHS = 5
 
 
 @dataclass(frozen=True)
 class Sizes:
     payload_bytes: int = 2048
-    # live: files of a few frames, after one warm-up trigger of
-    # warm_frames and one backlog trigger of backlog_frames
+    # live: files of a few frames, after the warm-up triggers of
+    # warm_frames each and one backlog trigger of backlog_frames
     live_frames_per_file: int = 16
     warm_frames: int = 256
-    # a backlog trigger (live) or build epoch (query) of this many frames
-    # is the timed saturated write
+    # live: the timed saturated write is one backlog trigger of this size
     backlog_frames: int = 2048
-    # query: store build and client mix
+    # query: store build epochs and client mix
+    epoch_frames: int = 1024
     retention_frames: int = 512
     lookup_keys: int = 16
     lookups_per_cycle: int = 4
@@ -79,7 +82,7 @@ class Sizes:
 
 TINY = Sizes(
     payload_bytes=256, live_frames_per_file=4, warm_frames=32,
-    backlog_frames=128, retention_frames=32, lookup_keys=8,
+    backlog_frames=128, epoch_frames=64, retention_frames=32, lookup_keys=8,
     lookups_per_cycle=2, scans_per_cycle=1, n_docs=120, n_vecs=80,
     n_events=2000,
 )
@@ -106,7 +109,7 @@ class Bench:
 class Result:
     setup_end: float
     window_s: float
-    write_fps: float  # frames/s of one saturated trigger after warm-up
+    write_fps: float  # frames/s of saturated triggers after warm-up
     latencies: list[float]  # freshness or operation latency, seconds
     attempted: int
     failed: int
@@ -467,18 +470,21 @@ def live(b: Bench) -> Result:
     # the measured files are those due in the --seconds after the lead-in
     n_lead = int(round(LIVE_LEAD_S * LIVE_FILES_PER_S))
     n_measured = max(2, int(round(b.seconds * LIVE_FILES_PER_S)))
-    n_files = n_lead + n_measured + int(round(LIVE_TAIL_S * LIVE_FILES_PER_S))
+    # the stream never idles, so the trigger that picks up the last
+    # measured file is the same whether or not files land after it
+    n_files = n_lead + n_measured
     names = files.stage(hold, range(n_files))
-    measured = names[n_lead:n_lead + n_measured]
-    warm.stage(hold, [0])
+    measured = names[n_lead:]
+    warm.stage(hold, range(WARM_TRIGGERS))
     backlog.stage(hold, [0])
     _create_store(b, store)
     pipe = Pipeline(b, watch, store, ckpt)
     q = pipe.start(None, available_now=False)
     try:
-        # warm-up trigger: JIT, worker start and codegen
-        _land(hold, watch, warm.name(0))
-        _await_commits(q, pipe, [warm.name(0)], 150)
+        # warm-up triggers: JIT, worker start and codegen
+        for k in range(WARM_TRIGGERS):
+            _land(hold, watch, warm.name(k))
+            _await_commits(q, pipe, [warm.name(k)], 150)
         # one saturated trigger: the backlog file, landed -> committed
         t_land = _land(hold, watch, backlog.name(0))
         batches = _await_commits(q, pipe, [backlog.name(0)], 150)
@@ -495,8 +501,7 @@ def live(b: Bench) -> Result:
         b.sampler.skip.add(gen.pid)
         with b.tracer.span("window", "bench") as window:
             try:
-                _await_picked(q, pipe, measured,
-                              LIVE_LEAD_S + b.seconds + LIVE_TAIL_S + 60)
+                _await_picked(q, pipe, measured, LIVE_LEAD_S + b.seconds + 60)
             finally:
                 open(stop, "w").close()
                 out, _ = gen.communicate(timeout=60)
@@ -515,9 +520,10 @@ def live(b: Bench) -> Result:
     t_close = max(pipe.commits[batches[n]] for n in ok) if ok else time.time()
     lat = [pipe.commits[batches[n]] - due[n] for n in ok]
     ks = [k for k in range(n_files) if files.name(k) in due]
-    expected = pd.concat([files.expected(ks), warm.expected([0]),
+    expected = pd.concat([files.expected(ks),
+                          warm.expected(range(WARM_TRIGGERS)),
                           backlog.expected([0])], ignore_index=True)
-    attempted = len(ks) * files.n + warm.n + backlog.n
+    attempted = len(ks) * files.n + WARM_TRIGGERS * warm.n + backlog.n
     failed = _store_failures(b, store, expected)
     failed |= {int(f) for k in ks
                if batches.get(files.name(k)) not in pipe.commits
@@ -607,17 +613,18 @@ def query(b: Bench) -> Result:
     store, ckpt = f"{b.root}/store", f"{b.root}/ckpt"
     inputs.write_curation_tables(sf, b.seed, s.n_docs, s.n_vecs, s.n_events)
 
-    # store: one merge_into commit per epoch of the streaming pipeline
-    files = FrameFiles(b, 0, s.backlog_frames, 0)
+    # store: one merge_into commit per epoch of the streaming pipeline.
+    # Each epoch after the warm-up is a timed saturated trigger, from the
+    # previous commit's return to its own
+    files = FrameFiles(b, 0, s.epoch_frames, 0)
     ks = range(BUILD_EPOCHS)
     names = files.stage(watch, ks)
     _create_store(b, store)
     pipe = Pipeline(b, watch, store, ckpt)
     drain_or_raise(pipe.start(1, available_now=True), 170, "store build")
-    # the first epoch warms the pipeline; the second is the timed
-    # saturated trigger, from the first commit's return to its own
-    epochs = [pipe.log.read()[n] for n in names]
-    write_s = pipe.commits[epochs[1]] - pipe.commits[epochs[0]]
+    commits = [pipe.commits[pipe.log.read()[n]] for n in names]
+    write_s = [t1 - t0 for t0, t1 in zip(commits[WARM_TRIGGERS - 1:],
+                                         commits[WARM_TRIGGERS:])]
     expected = files.expected(ks)
     gone = expected["frame_id"] < s.retention_frames
     deleted, present = expected[gone], expected[~gone].reset_index(drop=True)
@@ -741,12 +748,13 @@ def query(b: Bench) -> Result:
         _query_layers(b, pipe, status, ops_done, store, warm_keys, s)
     return Result(
         setup_end=t_open, window_s=window_s,
-        write_fps=files.n / write_s,
+        write_fps=files.n / statistics.median(write_s),
         latencies=[r["s"] for r in ops_done],
         attempted=len(checked), failed=failed,
         detail={
             "ops": len(ops_done), "cycles": cycle,
-            "ops_per_s": len(ops_done) / window_s, "write_s": round(write_s, 4),
+            "ops_per_s": len(ops_done) / window_s,
+            "write_s": [round(w, 4) for w in write_s],
             "lookup_p50_s": _med(by_kind.get("lookup", [])),
             "scan_p50_s": _med(by_kind.get("scan", [])),
             "curate_qps": len(by_kind.get("curate", []))
@@ -777,7 +785,7 @@ def _query_layers(b: Bench, pipe: Pipeline, status: SparkStatus,
     })
     _exec_layers(b, [in_range(*r["jobs"]) for r in ok])
     calls, secs, loads = (a.value for a in pipe.acc)
-    frames = BUILD_EPOCHS * s.backlog_frames
+    frames = BUILD_EPOCHS * s.epoch_frames
     b.layer.update({
         "inference.frames": frames,
         "inference.model_calls": calls,
