@@ -221,18 +221,20 @@ def test_ivf_topk_pivots_recall_vs_brute_force(spark):
 def test_embedding_near_pairs_block_invariance(spark):
     """The blocked all-pairs result must be identical for any block size
     (1 block vs many) — partitioning is a physical choice, not a
-    semantic one."""
+    semantic one. The result is a set: row order follows the block
+    count (which also follows defaultParallelism), so the two runs are
+    compared as sorted multisets."""
     from video_streamer_spark.operators.similarity import embedding_near_pairs
 
     emb = table(spark, SF_ORACLE, "embeddings")
-    one = [
+    one = sorted(
         tuple(r)
         for r in embedding_near_pairs(emb, threshold=0.35, block_rows=4096).collect()
-    ]
-    many = [
+    )
+    many = sorted(
         tuple(r)
         for r in embedding_near_pairs(emb, threshold=0.35, block_rows=100).collect()
-    ]
+    )
     assert one == many
     assert len(one) > 0
 
@@ -999,68 +1001,68 @@ def test_orc_round_trip(spark, tmp_path):
 
 
 def test_merge_parquet_table_upsert_insert_delete(spark, tmp_path):
-    """Physical MERGE stand-in (operators/merge.py): all three arms land
-    correctly, re-applying the same changeset is a no-op (idempotent),
-    and UNTOUCHED hash buckets are not rewritten — the partition-pruned
-    touched-bucket rewrite that makes the pattern viable at 100 TB."""
-    import os
-
+    """Keyed-table MERGE (create_table + merge_table): all three arms
+    land in one commit, re-applying the same changeset leaves the same
+    rows (and commits nothing under its idempotency key), and UNTOUCHED
+    hash buckets carry over by reference — the touched-bucket rewrite
+    that keeps a point update priced by churn, not table size."""
     from video_streamer_spark.operators import merge as M
+    from video_streamer_spark.operators.table_format import (
+        _read_manifest,
+        create_table,
+        merge_table,
+        read_table,
+    )
 
     path = str(tmp_path / "t")
     base = spark.range(100).select(
         F.col("id").alias("key"), (F.col("id") * 10).alias("val")
     )
-    M.init_merge_table(base, path, ["key"], n_buckets=8)
+    create_table(base, path, ["key"], n_buckets=8)
 
     changes = spark.createDataFrame(
         [(5, "U", 999), (1000, "I", 1), (7, "D", None)],
         "key long, __op string, val long",
     )
-    # snapshot per-bucket mtimes before the merge
-    def bucket_mtimes():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith("pb="):
-                full = os.path.join(path, d)
-                out[d] = max(
-                    os.path.getmtime(os.path.join(full, f))
-                    for f in os.listdir(full)
-                    if f.endswith(".parquet")
-                )
-        return out
-
-    before = bucket_mtimes()
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=8)
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
+    v = merge_table(spark, path, changes, idempotency_key="cdc:0")
+    assert v == 2
+    got = {r["key"]: r["val"] for r in read_table(spark, path).collect()}
     assert got[5] == 999 and got[1000] == 1 and 7 not in got
     assert len(got) == 100  # 100 - 1 delete + 1 insert
 
-    # untouched buckets must not have been rewritten
+    # untouched buckets keep their pre-merge data dirs
     touched = {
-        f"pb={r[0]}"
+        str(r[0])
         for r in M._bucketed(changes, ["key"], 8).select("pb").distinct().collect()
     }
-    after = bucket_mtimes()
-    for d, t in before.items():
-        if d not in touched:
-            assert after[d] == t, f"untouched bucket {d} was rewritten"
+    before, after = _read_manifest(path, 1), _read_manifest(path, 2)
+    for b, d in before["buckets"].items():
+        if b not in touched:
+            assert after["buckets"][b] == d, f"untouched bucket {b} was rewritten"
 
-    # idempotence: same changeset again → identical end state
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=8)
-    again = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
+    # idempotence: a replayed epoch commits nothing; the same changeset
+    # applied again as a fresh commit converges to the same rows
+    assert merge_table(spark, path, changes, idempotency_key="cdc:0") == 2
+    merge_table(spark, path, changes)
+    again = {r["key"]: r["val"] for r in read_table(spark, path).collect()}
     assert again == got
 
 
 def test_run_merge_upsert_sink_streaming(spark, tmp_path):
-    """Streaming CDC-apply: two micro-batches of changes merge into the
-    keyed table with upsert/delete semantics holding across epochs."""
-    from video_streamer_spark.operators import merge as M
+    """Streaming CDC-apply (run_acid_merge_sink): two micro-batches of
+    changes merge into the keyed table with upsert/delete semantics
+    holding across epochs, one committed version per epoch."""
+    from video_streamer_spark.operators.table_format import (
+        create_table,
+        current_version,
+        read_table,
+        run_acid_merge_sink,
+    )
 
     path = str(tmp_path / "t")
     src = tmp_path / "changes"
     src.mkdir()
-    M.init_merge_table(
+    create_table(
         spark.range(10).select(
             F.col("id").alias("key"), F.lit("base").alias("val")
         ),
@@ -1072,20 +1074,21 @@ def test_run_merge_upsert_sink_streaming(spark, tmp_path):
     import pyarrow.parquet as pq
 
     def change_file(name: str, rows: list[tuple]) -> None:
-        keys, ops, vals = zip(*rows)
+        keys, ops, vals, seqs = zip(*rows)
         pq.write_table(
             pa.table(
                 {
                     "key": pa.array(keys, pa.int64()),
                     "__op": pa.array(ops, pa.string()),
                     "val": pa.array(vals, pa.string()),
+                    "seq": pa.array(seqs, pa.int64()),
                 }
             ),
             str(src / name),
         )
 
-    change_file("f1.parquet", [(3, "U", "updated"), (42, "I", "inserted")])
-    change_file("f2.parquet", [(42, "D", None), (4, "U", "later")])
+    change_file("f1.parquet", [(3, "U", "updated", 1), (42, "I", "inserted", 2)])
+    change_file("f2.parquet", [(42, "D", None, 3), (4, "U", "later", 4)])
     # FileStreamSource orders a listing by modification time, with
     # UNSPECIFIED tie-breaking when both files land in the same
     # timestamp tick — the lexicographic-order assumption this test
@@ -1101,12 +1104,13 @@ def test_run_merge_upsert_sink_streaming(spark, tmp_path):
     os.utime(src / "f2.parquet", (now - 5, now - 5))
 
     stream = (
-        spark.readStream.schema("key long, __op string, val string")
+        spark.readStream.schema("key long, __op string, val string, seq long")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    M.run_merge_upsert_sink(stream, path, ["key"], n_buckets=4)
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
+    run_acid_merge_sink(stream, path, ["key"], "seq", str(tmp_path / "ckpt"))
+    assert current_version(path) == 3  # one commit per epoch
+    got = {r["key"]: r["val"] for r in read_table(spark, path).collect()}
     assert got[3] == "updated" and got[4] == "later"
     # 42 was inserted (f1, older mtime) then deleted (f2, newer)
     assert 42 not in got
@@ -1291,11 +1295,15 @@ def test_schema_evolution_merge_read(spark, tmp_path):
 def test_incremental_rollup_maintenance_via_merge(spark, tmp_path):
     """Materialized-rollup refresh without a full recompute: a daily
     aggregate table is maintained by recomputing ONLY the days a late
-    batch touches and MERGEing those rows back (operators/merge.py) —
+    batch touches and MERGEing those rows back (table_format.merge_table) —
     the end state must equal a from-scratch rollup over base ∪ late.
     At 100 TB this is the difference between re-aggregating the fact
     table and re-aggregating two days of it."""
-    from video_streamer_spark.operators import merge as M
+    from video_streamer_spark.operators.table_format import (
+        create_table,
+        merge_table,
+        read_table,
+    )
 
     path = str(tmp_path / "rollup")
     base = spark.createDataFrame(
@@ -1306,7 +1314,7 @@ def test_incremental_rollup_maintenance_via_merge(spark, tmp_path):
     rollup = base.groupBy("day").agg(
         F.count("*").alias("n"), F.sum("v").alias("s")
     )
-    M.init_merge_table(rollup, path, ["day"], n_buckets=4)
+    create_table(rollup, path, ["day"], n_buckets=4)
 
     late = spark.createDataFrame(
         [("2024-01-02", 3.0), ("2024-01-04", 9.0)], "day string, v double"
@@ -1320,11 +1328,11 @@ def test_incremental_rollup_maintenance_via_merge(spark, tmp_path):
         .agg(F.count("*").alias("n"), F.sum("v").alias("s"))
         .withColumn("__op", F.lit("U"))
     )
-    M.merge_parquet_table(spark, path, fresh, ["day"], n_buckets=4)
+    merge_table(spark, path, fresh)
 
     got = {
         r["day"]: (r["n"], r["s"])
-        for r in M.read_merge_table(spark, path).collect()
+        for r in read_table(spark, path).collect()
     }
     want = {
         r["day"]: (r["n"], r["s"])
@@ -1365,50 +1373,6 @@ def test_compact_changeset_seq_lww_and_no_seq_assert(spark):
     # single-op-per-key batches pass through untouched
     clean = batch.where(F.col("seq").isin(30, 5)).drop("seq")
     assert M.compact_changeset(clean, ["key"], None).count() == 2
-
-
-def test_merge_partial_commit_replay(spark, tmp_path):
-    """Crash contract of merge_parquet_table: the per-partition commit
-    can leave a strict subset of touched buckets merged. Simulate by
-    snapshotting one touched bucket pre-merge, merging, then restoring
-    that bucket (as if its commit never landed) — replaying the SAME
-    changeset must converge the table to the full post-merge state."""
-    import shutil
-
-    from video_streamer_spark.operators import merge as M
-
-    path = str(tmp_path / "t")
-    base = spark.range(60).select(
-        F.col("id").alias("key"), (F.col("id") * 10).alias("val")
-    )
-    M.init_merge_table(base, path, ["key"], n_buckets=4)
-
-    changes = spark.createDataFrame(
-        [(5, "U", 999), (1000, "I", 1), (7, "D", None), (23, "U", 777)],
-        "key long, __op string, val long",
-    )
-    touched = sorted(
-        r["pb"]
-        for r in M._bucketed(changes, ["key"], 4).select("pb").distinct().collect()
-    )
-    assert len(touched) >= 2, "need ≥2 touched buckets to simulate a partial commit"
-    victim = f"pb={touched[0]}"
-    backup = str(tmp_path / "victim-backup")
-    shutil.copytree(f"{path}/{victim}", backup)
-
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=4)
-    want = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-
-    # crash simulation: victim bucket's commit is rolled back
-    shutil.rmtree(f"{path}/{victim}")
-    shutil.copytree(backup, f"{path}/{victim}")
-    partial = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-    assert partial != want  # genuinely partial
-
-    # recovery = idempotent replay of the same changeset
-    M.merge_parquet_table(spark, path, changes, ["key"], n_buckets=4)
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
-    assert got == want
 
 
 def test_compact_crash_recovery(spark, tmp_path):
@@ -1784,18 +1748,22 @@ def test_versioned_snapshots_time_travel(spark, tmp_path):
 
 
 def test_run_merge_upsert_sink_with_seq(spark, tmp_path):
-    """Streaming CDC-apply with per-key HISTORY in one batch: the
-    seq-ordered compaction must apply the highest-sequence op per key,
-    deterministically."""
+    """Streaming CDC-apply (run_acid_merge_sink) with per-key HISTORY in
+    one batch: the seq-ordered compaction must apply the
+    highest-sequence op per key, deterministically."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from video_streamer_spark.operators import merge as M
+    from video_streamer_spark.operators.table_format import (
+        create_table,
+        read_table,
+        run_acid_merge_sink,
+    )
 
     path = str(tmp_path / "t")
     src = tmp_path / "changes"
     src.mkdir()
-    M.init_merge_table(
+    create_table(
         spark.range(5).select(
             F.col("id").alias("key"), F.lit("base").alias("val")
         ),
@@ -1818,8 +1786,8 @@ def test_run_merge_upsert_sink_with_seq(spark, tmp_path):
     stream = spark.readStream.schema(
         "key long, __op string, val string, seq long"
     ).parquet(str(src))
-    M.run_merge_upsert_sink(stream, path, ["key"], n_buckets=4, seq_col="seq")
-    got = {r["key"]: r["val"] for r in M.read_merge_table(spark, path).collect()}
+    run_acid_merge_sink(stream, path, ["key"], "seq", str(tmp_path / "ckpt"))
+    got = {r["key"]: r["val"] for r in read_table(spark, path).collect()}
     assert got[1] == "final"  # highest seq won, not an arbitrary row
     assert 2 not in got
     assert len(got) == 4
@@ -2720,51 +2688,6 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
     for r in sel:
         fps[r.doc_id].add(r.fp)
     assert fps[1] & fps[2], sel
-
-
-def test_result_cache_hit_miss_and_invalidation(spark, tmp_path):
-    """Result cache contract: first call builds (miss), second serves
-    the cache (hit, plan is a plain scan of the cache path, builder NOT
-    invoked), input mutation invalidates (miss again)."""
-    import os
-
-    from video_streamer_spark.operators.result_cache import cached_result
-
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    spark.range(100).withColumnRenamed("id", "v").coalesce(1).write.parquet(
-        str(tmp_path / "stage")
-    )
-    for f in os.listdir(str(tmp_path / "stage")):
-        if f.endswith(".parquet"):
-            os.rename(
-                os.path.join(str(tmp_path / "stage"), f),
-                os.path.join(src, "t.parquet"),
-            )
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return (
-            spark.read.parquet(os.path.join(src, "t.parquet"))
-            .groupBy((F.col("v") % 10).alias("b"))
-            .count()
-        )
-
-    root = str(tmp_path / "cache")
-    df1, hit1 = cached_result(spark, "agg", src, build, cache_root=root)
-    assert not hit1 and calls["n"] == 1
-    want = sorted(map(tuple, df1.collect()))
-
-    df2, hit2 = cached_result(spark, "agg", src, build, cache_root=root)
-    assert hit2 and calls["n"] == 1
-    assert sorted(map(tuple, df2.collect())) == want
-    assert all(root in p for p in df2.inputFiles())  # serves the cache
-
-    # mutate the input -> stale -> rebuild
-    os.utime(os.path.join(src, "t.parquet"))
-    _, hit3 = cached_result(spark, "agg", src, build, cache_root=root)
-    assert not hit3 and calls["n"] == 2
 
 
 def test_asof_join_quotes_awkward_column_names(spark):

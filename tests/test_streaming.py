@@ -453,68 +453,6 @@ def test_sliding_stream_equals_batch(spark):
     assert rows_set(got) == rows_set(want)
 
 
-def test_stateful_sessions_v2_transform_with_state(spark):
-    """The transformWithStateInPandas sessionizer (modern state API) must
-    satisfy the same batch sandwich as the applyInPandasWithState one:
-    required ⊆ emitted ⊆ all batch sessions, no duplicates — proving the
-    session logic ports across Spark's state API generations."""
-    # TWS's state protocol speaks protobuf; this container does not ship
-    # google.protobuf (and installs are off-limits), so the modern-API
-    # path can only run where protobuf exists. The v1 sessionizer above
-    # is the in-container verified implementation.
-    pytest.importorskip("google.protobuf.descriptor")
-    from video_streamer_spark.queries.temporal import SESSION_GAP_SECONDS
-    from video_streamer_spark.streaming.stateful_v2 import stateful_sessions_v2
-
-    stream = stateful_sessions_v2(
-        sp.events_stream(spark, SF_ORACLE), gap_seconds=SESSION_GAP_SECONDS
-    )
-    name = sp.run_available_now(stream, "stateful_sessions_v2_sink", "append")
-    got = [
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    ]
-
-    from pyspark.sql.window import Window
-
-    e = table(spark, SF_ORACLE, "events")
-    w_lag = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w_run = w_lag.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = e.select(
-        "user_id", "ts", "event_id",
-        F.when(
-            F.lag("ts").over(w_lag).isNull()
-            | ((F.col("ts").cast("double") - F.lag("ts").over(w_lag).cast("double"))
-               > SESSION_GAP_SECONDS),
-            1,
-        ).otherwise(0).alias("is_new"),
-    )
-    sessions = flagged.select(
-        "user_id", "ts", F.sum("is_new").over(w_run).alias("session_id")
-    )
-    bounds = sessions.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_events"),
-    )
-    last = bounds.groupBy("user_id").agg(F.max("session_id").alias("last_id"))
-    as_tuple = lambda r: (  # noqa: E731
-        r["user_id"], r["session_start"], r["session_end"], r["n_events"]
-    )
-    all_sessions = {as_tuple(r) for r in bounds.collect()}
-    required = {
-        as_tuple(r)
-        for r in bounds.join(
-            last,
-            (bounds.user_id == last.user_id) & (bounds.session_id == last.last_id),
-            "left_anti",
-        ).collect()
-    }
-    got_set = set(got)
-    assert len(got) == len(got_set) > 0
-    assert required <= got_set <= all_sessions
-
-
 def test_rowwise_signatures_equal_batch_signatures(spark):
     """The shuffle-free (streaming-shape) minhash signatures must be
     bit-identical to the exploded+partial-agg batch form."""

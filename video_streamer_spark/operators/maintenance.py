@@ -5,8 +5,8 @@ files per partition (each micro-batch × each task writes one); at 100 TB
 the resulting footer/open overhead dominates scan time and NameNode/
 listing pressure. Compaction is the standard maintenance pass every
 table format ships (Delta OPTIMIZE, Iceberg rewrite_data_files) — this
-is the plain-parquet stand-in, same shape as operators/merge.py is for
-MERGE.
+is the plain-parquet stand-in for unkeyed tables; keyed tables compact
+through ``table_format.optimize_table``.
 """
 
 from __future__ import annotations
@@ -120,7 +120,7 @@ def compact_parquet_dir(
 # torn state. Old versions stay readable until vacuumed — snapshot
 # isolation for free, at the cost of full-copy snapshots (the honest
 # tradeoff vs a manifest format's shared data files; incremental state
-# lives in operators/merge.py).
+# lives in operators/table_format.py).
 
 _COMMITS = "_COMMITS"
 

@@ -1454,12 +1454,11 @@ def ivf_index_upsert(
     rewrite ONLY the touched ``cell=`` partitions — each rewritten as
     (surviving old rows ANTI-JOIN delta ids) ∪ delta rows, last write
     wins per vec_id. Untouched partitions are never read or written
-    (the merge.py touched-bucket discipline on the index layout).
+    (the table_format touched-bucket discipline on the index layout).
     Returns the touched cell ids (≤ |delta| — a request-sized driver
     list, same class as the merge bucket list).
 
-    Crash contract (the maintenance.py/result_cache stage-and-swap
-    discipline): the merged touched cells are materialized into a
+    Crash contract (the maintenance.py stage-and-swap discipline): the merged touched cells are materialized into a
     sibling ``.upsert-tmp`` directory FIRST — the live index is never
     read-and-overwritten in one job — then swapped in per cell with two
     renames (``cell=c`` → ``cell=c.old``, staged → ``cell=c``). A crash

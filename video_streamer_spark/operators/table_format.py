@@ -1,8 +1,6 @@
 """A minimal snapshot-versioned table format: ATOMIC multi-bucket
-commits over plain parquet — closing the one documented gap of
-``operators/merge.py`` (its dynamic partition overwrite commits per
-partition, so a crash mid-merge exposes a half-merged table until the
-changeset is replayed).
+commits over plain parquet — the repo's one keyed-table format. Its
+logical merge and bucket routing live in ``operators/merge.py``.
 
 This is the log-of-manifests design real table formats (Delta,
 Iceberg) reduce to, in its smallest honest form:
@@ -59,6 +57,7 @@ import os
 import threading
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1320,6 +1319,92 @@ def read_table_where(
     return out
 
 
+class _KeyRoute(NamedTuple):
+    keys: DataFrame  # the key frame cast to the declared key types
+    read_set: set[int]  # every routed bucket: the OCC read set
+    wanted: list[str]  # routed buckets the bloom did not veto
+    has_dup: bool  # some key occurs more than once
+
+
+def _route_keys(keys: DataFrame, doc: dict) -> _KeyRoute:
+    """Classify a key frame against a manifest in ONE small collect —
+    the routing every keyed read-then-write shares (point lookups,
+    ``merge_into``, statement INSERT).
+
+    Keys are cast to the table's declared key types before hashing:
+    xxhash64 is type-sensitive, and an int literal probing a bigint key
+    would route to the wrong bucket (a silent miss). Each distinct key
+    is counted and routed with ``_bucketed`` (which refuses null key
+    components), so the same job yields the full routed bucket set (the
+    classification READ set a serializable commit re-validates), the
+    buckets left to read once the bloom vetoes provably-absent keys,
+    and whether any key occurs twice (a MERGE/INSERT source refusal).
+
+    The collect is bounded by the bucket count, or by the distinct-key
+    count on a bloom-keyed table (the veto needs each key's hash
+    streams)."""
+    key_cols, n_buckets = doc["key_cols"], doc["n_buckets"]
+    types = {f.name: f.dataType for f in _table_schema(doc).fields}
+    keys = keys.select(
+        *[F.col(k).cast(types[k]).alias(k) for k in key_cols]
+    )
+    routed = _bucketed(
+        keys.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__n")),
+        key_cols,
+        n_buckets,
+    )
+    bloom = _bloom_conf(doc)
+    if (
+        bloom is not None
+        and len(key_cols) == 1
+        and key_cols[0] in bloom["cols"]
+    ):
+        # miss-heavy lookups: the bloom vetoes the routed bucket when
+        # the key is provably absent, so probing a key the table never
+        # held reads ZERO files instead of one bucket
+        kc = key_cols[0]
+        rows = routed.select(
+            BUCKET_COL,
+            "__n",
+            F.xxhash64(F.col(kc)).alias("__h1"),
+            F.xxhash64(F.col(kc), F.lit(1)).alias("__h2"),
+        ).collect()
+        wanted = {
+            str(r[BUCKET_COL])
+            for r in rows
+            if not _bloom_absent(
+                bloom,
+                str(r[BUCKET_COL]),
+                kc,
+                r["__h1"] & 0xFFFFFFFFFFFFFFFF,
+                r["__h2"] & 0xFFFFFFFFFFFFFFFF,
+            )
+        }
+    else:
+        rows = (
+            routed.groupBy(BUCKET_COL)
+            .agg(F.max("__n").alias("__n"))
+            .collect()
+        )
+        wanted = {str(r[BUCKET_COL]) for r in rows}
+    return _KeyRoute(
+        keys,
+        {r[BUCKET_COL] for r in rows},
+        sorted(wanted),
+        any(r["__n"] > 1 for r in rows),
+    )
+
+
+def _read_routed(
+    spark: SparkSession, path: str, doc: dict, route: _KeyRoute
+) -> DataFrame:
+    """The table rows matching ``route.keys``: only the routed,
+    un-vetoed buckets are read, and the residual semi join against the
+    broadcast key set keeps the result exact."""
+    out = _read_buckets(spark, path, doc, route.wanted)
+    return out.join(F.broadcast(route.keys), doc["key_cols"], "semi")
+
+
 def read_table_for_keys(
     spark: SparkSession,
     path: str,
@@ -1331,64 +1416,12 @@ def read_table_for_keys(
 
     The key hash IS the physical layout, so the lookup resolves each
     key to its one bucket with arithmetic (the same
-    ``pmod(xxhash64(keys), n)`` the writer used) and reads only those
-    buckets — a k-key lookup against a 100 TB table touches at most k
-    buckets regardless of table size. The residual semi join against
-    the broadcast key set keeps the result exact."""
+    ``pmod(xxhash64(keys), n)`` the writer used, ``_route_keys``) and
+    reads only those buckets — a k-key lookup against a 100 TB table
+    touches at most k buckets regardless of table size."""
     v = current_version(path) if version is None else version
     doc = _read_retained_manifest(path, v)
-    key_cols, n_buckets = doc["key_cols"], doc["n_buckets"]
-    # cast lookup keys to the table's declared key types before
-    # hashing — xxhash64 is type-sensitive, and an int literal probing
-    # a bigint key would route to the wrong bucket (a silent miss)
-    types = {f.name: f.dataType for f in _table_schema(doc).fields}
-    keys = keys.select(
-        *[F.col(k).cast(types[k]).alias(k) for k in key_cols]
-    ).distinct()
-    bloom = _bloom_conf(doc)
-    if (
-        bloom is not None
-        and len(key_cols) == 1
-        and key_cols[0] in bloom["cols"]
-    ):
-        # miss-heavy lookups: the bloom vetoes the routed bucket when
-        # the key is provably absent, so probing a key the table never
-        # held reads ZERO files instead of one bucket. Hash streams
-        # come back from the same (small) collect that resolves bucket
-        # routing — no extra job.
-        kc = key_cols[0]
-        rows = (
-            _bucketed(keys, key_cols, n_buckets)
-            .select(
-                BUCKET_COL,
-                F.xxhash64(F.col(kc)).alias("__h1"),
-                F.xxhash64(F.col(kc), F.lit(1)).alias("__h2"),
-            )
-            .collect()  # bounded by the (small) key-set size
-        )
-        wanted = sorted(
-            {
-                str(r[BUCKET_COL])
-                for r in rows
-                if not _bloom_absent(
-                    bloom,
-                    str(r[BUCKET_COL]),
-                    kc,
-                    r["__h1"] & 0xFFFFFFFFFFFFFFFF,
-                    r["__h2"] & 0xFFFFFFFFFFFFFFFF,
-                )
-            }
-        )
-    else:
-        wanted = [
-            str(r[BUCKET_COL])
-            for r in _bucketed(keys, key_cols, n_buckets)
-            .select(BUCKET_COL)
-            .distinct()
-            .collect()  # bounded by the (small) key-set size
-        ]
-    out = _read_buckets(spark, path, doc, wanted)
-    return out.join(F.broadcast(keys), key_cols, "semi")
+    return _read_routed(spark, path, doc, _route_keys(keys, doc))
 
 
 def table_changes(
@@ -2390,9 +2423,10 @@ def merge_into(
     The ON condition is implicitly equality on the table's KEY columns
     — deliberately: the key hash is the physical layout, so a key-ON
     merge classifies by reading ONLY the buckets the source keys route
-    to (``read_table_for_keys``), a churn-sized cost at any table
-    size. An arbitrary theta-ON merge cannot route and would scan the
-    table; that is a join-then-overwrite pipeline, not this operator.
+    to (the point-lookup routing, ``_route_keys``), a churn-sized
+    cost at any table size. An arbitrary theta-ON merge cannot route
+    and would scan the table; that is a join-then-overwrite pipeline,
+    not this operator.
 
     Clause expressions are SQL strings over two row aliases — ``s.``
     (source) and ``t.`` (target, null-padded for not-matched rows):
@@ -2494,45 +2528,24 @@ def merge_into(
                     "(and its bucket routing) — delete+insert instead"
                 )
 
-    # one bounded job on the churn-sized source: duplicate keys would
-    # make the merge order-dependent — refuse, never pick silently
-    dup = (
-        source.groupBy(*key_cols)
-        .count()
-        .where(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
+    # one bounded job on the churn-sized source routes its keys and
+    # finds duplicates: two changes to one target row would make the
+    # merge order-dependent — refuse, never pick silently
+    route = _route_keys(source.select(*key_cols), doc)
+    if route.has_dup:
         raise ValueError(
             "multiple source rows share a key: a MERGE applying two "
             "changes to one target row is non-deterministic. "
             "Pre-aggregate the source to one row per key."
         )
-
-    target = read_table_for_keys(
-        spark, path, source.select(*key_cols), version=base_v
-    )
+    target = _read_routed(spark, path, doc, route)
     # The classification READ set: every bucket any source key routes
-    # to (same cast-then-hash routing the reader used). Passed to the
-    # commit so rebase eligibility re-validates the pinned-snapshot
-    # classification against concurrent winners — a winner touching a
+    # to, bloom-vetoed or not. Passed to the commit so rebase
+    # eligibility re-validates the pinned-snapshot classification
+    # against concurrent winners — a winner touching a
     # classified-but-unwritten bucket re-raises instead of rebasing
     # (closes the WriteSerializable-style write-skew window).
-    types = {f.name: f.dataType for f in schema.fields}
-    read_buckets = {
-        r[BUCKET_COL]
-        for r in _bucketed(
-            source.select(
-                *[F.col(k).cast(types[k]).alias(k) for k in key_cols]
-            ),
-            key_cols,
-            doc["n_buckets"],
-        )
-        .select(BUCKET_COL)
-        .distinct()  # bucket-level only: a key-level distinct first
-        .collect()   # would be a full extra exchange for nothing
-    }
+    read_buckets = route.read_set
     # Matched-detection uses an explicit join-hit marker, NOT key
     # nullness: with eqNullSafe a target row whose first key column is
     # NULL can match, and testing t.<key0> IS NOT NULL would
@@ -2612,9 +2625,7 @@ def merge_into(
         # at all of them, so a concurrent writer anywhere must
         # conflict, never be rebased past.
         snap = read_table(spark, path, version=base_v)
-        skeys = source.select(
-            *[F.col(k).cast(types[k]).alias(k) for k in key_cols]
-        ).distinct()
+        skeys = route.keys.distinct()
         anti_on = None
         for k in key_cols:
             p = F.col(f"t.{k}").eqNullSafe(F.col(f"sk.{k}"))

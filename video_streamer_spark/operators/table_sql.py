@@ -104,9 +104,10 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from video_streamer_spark.operators.merge import BUCKET_COL, _bucketed
 from video_streamer_spark.operators.table_format import (
     _read_retained_manifest,
+    _read_routed,
+    _route_keys,
     _table_schema,
     current_version,
     delete_keys,
@@ -115,7 +116,6 @@ from video_streamer_spark.operators.table_format import (
     merge_table,
     optimize_table,
     read_table,
-    read_table_for_keys,
     restore_table,
     vacuum,
     version_at_timestamp,
@@ -896,23 +896,16 @@ def _insert(
             f"produces {len(rows.columns)}"
         )
     changes = rows.toDF(*cols)
-    # duplicate keys inside the insert set are as non-deterministic as
-    # in a MERGE source — refuse, never pick silently
-    dup = (
-        changes.groupBy(*key_cols)
-        .count()
-        .where(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
+    # one routing job: duplicate keys inside the insert set are as
+    # non-deterministic as in a MERGE source — refuse, never pick
+    # silently
+    route = _route_keys(changes.select(*key_cols), doc)
+    if route.has_dup:
         raise TableSqlError(
             "INSERT rows share a key: a keyed table holds one row per "
             "key — deduplicate the source first"
         )
-    clash = read_table_for_keys(
-        spark, path, changes.select(*key_cols), version=base_v
-    ).select(*key_cols)
+    clash = _read_routed(spark, path, doc, route).select(*key_cols)
     hits = clash.limit(3).collect()
     if hits:
         raise TableSqlError(
@@ -923,26 +916,12 @@ def _insert(
         )
     # the commit's READ set: every bucket an incoming key routes to,
     # so the not-exists check above stays provably exact under OCC
-    types = {f.name: f.dataType for f in schema.fields}
-    read_buckets = {
-        r[BUCKET_COL]
-        for r in _bucketed(
-            changes.select(
-                *[F.col(k).cast(types[k]).alias(k) for k in key_cols]
-            ),
-            key_cols,
-            doc["n_buckets"],
-        )
-        .select(BUCKET_COL)
-        .distinct()
-        .collect()
-    }
     v = merge_table(
         spark,
         path,
         changes,
         base_version=base_v,
-        read_buckets=read_buckets,
+        read_buckets=route.read_set,
     )
     return _version_df(spark, v)
 

@@ -760,15 +760,15 @@ def x54_date_spine_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# x56: MERGE / upsert (the ACID-table-format capability, operators/merge.py
-# — apply_changeset is the logical plan Delta's MERGE INTO compiles to:
+# x56: MERGE / upsert (the logical layer of the keyed-table format,
+# operators/merge.py — apply_changeset is the logical plan Delta's MERGE INTO compiles to:
 # changeset anti-joined against base on the key, surviving changes
 # unioned back). The changeset exercises all three arms — WHEN MATCHED
 # UPDATE (keys %10==0, price × 1.1 in exact decimal), WHEN NOT MATCHED
 # INSERT (fresh keys at +100M), WHEN MATCHED DELETE (keys %13==0) — and
 # the result is rolled up per status so the driver row stays compact.
-# The physical touched-bucket parquet rewrite is tested in
-# tests/test_sources_and_ops.py (idempotence + partition pruning).
+# The physical touched-bucket rewrite is table_format.merge_table,
+# tested in tests/test_sources_and_ops.py and tests/test_table_format.py.
 @query(
     "x56_merge_upsert_result",
     oracle="""

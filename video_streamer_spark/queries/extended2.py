@@ -1183,7 +1183,7 @@ def x225_minmax_dirty_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # correction surface — label fixes, late-arriving dedup verdicts,
 # retention deletes — priced as churn. merge_into classifies the
 # source against ONE pinned snapshot by reading ONLY the buckets the
-# source keys route to (read_table_for_keys — a k-key classification
+# source keys route to (the point-lookup routing — a k-key classification
 # against a 100 TB table touches at most k buckets), applies SQL
 # clause expressions over s./t. row aliases, and lands everything in
 # one atomic commit; a concurrent disjoint winner rebases, an
