@@ -57,12 +57,15 @@ def _max_job_id(spark) -> int:
 def test_merge_into_inference_source_passes(spark, tmp_path):
     """One routing pass: the keyed classification (duplicate-key
     refusal, routed target read, OCC read set) comes from ONE job over
-    the source, so a commit evaluates an inference source 3 times per
-    frame in 13 jobs. Before the classification was shared — a
+    the source, and the routed target read joins the source only once
+    (the merge's left join; no residual semi join against the source
+    keys), so a commit evaluates an inference source 2 times per frame
+    in 12 jobs. With the semi join the same commit measured 3.0 calls
+    per frame and 13 jobs; before the classification was shared — a
     duplicate-key job, a routing collect inside the target lookup and
-    a second routing collect for the read set — this same commit
-    measured 5.0 model calls per frame and 18 jobs (local[4], the test
-    session's conf), the figures the traced benchmark run reads too."""
+    a second routing collect for the read set — 5.0 and 18 (local[4],
+    the test session's conf), the figures the traced benchmark run
+    reads too."""
     from video_streamer_spark.operators.detections import threshold_filter
     from video_streamer_spark.operators.inference import (
         DETECTION_SCHEMA,
@@ -99,8 +102,8 @@ def test_merge_into_inference_source_passes(spark, tmp_path):
     per_frame = calls.value / N_FRAMES
 
     assert current_version(path) == 3  # both commits landed
-    assert per_frame == 3.0, per_frame
-    assert jobs == 13, jobs
+    assert per_frame == 2.0, per_frame
+    assert jobs == 12, jobs
     # the shared classification still refuses duplicate source keys
     dup = source(0).unionByName(source(0).limit(1))
     with pytest.raises(ValueError, match="multiple source rows"):

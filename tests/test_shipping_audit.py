@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import sys
 
 UDF_CALLS = {
     "mapInPandas",
@@ -257,4 +258,189 @@ def test_udf_closures_ship_their_cross_module_references():
         "worker-side closures reference un-shipped in-package modules "
         "(external-cwd workers will raise ModuleNotFoundError, "
         "order-dependently):\n" + "\n".join(offenders)
+    )
+
+
+# -- the data-source runner rule ---------------------------------------
+#
+# Methods of a registered Python DataSource run in Spark's data-source
+# runner, a process that cannot import this package when the driver
+# runs outside the repo. Everything those methods reach must therefore
+# be importable there (the standard library, pyspark, pandas, pyarrow)
+# or travel in the pickle: an in-package module that ship_modules
+# itself and imports nothing in-package that does not ship too.
+
+RUNNER_MODULES = (
+    "video_streamer_spark.sources.cdf_source",
+    "video_streamer_spark.sources.snapshot_source",
+    "video_streamer_spark.sources.frame_source",
+)
+RUNNER_BASES = {
+    "DataSource",
+    "DataSourceReader",
+    "DataSourceStreamReader",
+    "SimpleDataSourceStreamReader",
+    "InputPartition",
+}
+RUNNER_LIBS = {"pyspark", "pandas", "pyarrow"}
+# ship_module itself only runs at import time, on the driver
+SHIPPING = "video_streamer_spark.functions.shipping"
+
+
+def _import_targets(node: ast.AST) -> dict[str, str]:
+    """local name -> imported module, for the import statements
+    anywhere under ``node`` (``from m import f`` binds f to m, or to
+    the submodule m.f when that is a module)."""
+    out: dict[str, str] = {}
+    for n in ast.walk(node):
+        if isinstance(n, ast.ImportFrom) and n.module and not n.level:
+            for a in n.names:
+                sub = f"{n.module}.{a.name}"
+                in_pkg = sub.startswith("video_streamer_spark")
+                out[a.asname or a.name] = (
+                    sub if in_pkg and _is_module(sub) else n.module
+                )
+        elif isinstance(n, ast.Import):
+            for a in n.names:
+                out[a.asname or a.name.split(".")[0]] = (
+                    a.name if a.asname else a.name.split(".")[0]
+                )
+    return out
+
+
+def _self_ships(tree: ast.AST) -> bool:
+    return "sys.modules[__name__]" in {
+        a
+        for node in tree.body
+        if isinstance(node, ast.Expr) and isinstance(node.value, ast.Call)
+        for a in _ship_args(node)
+    }
+
+
+def _runner_safe(module: str, seen: set[str]) -> list[str]:
+    """Why ``module`` cannot be used from the runner ([] = it can)."""
+    top = module.split(".")[0]
+    if top in RUNNER_LIBS or top in sys.stdlib_module_names:
+        return []
+    if top != "video_streamer_spark":
+        return [f"{module} is neither stdlib nor {sorted(RUNNER_LIBS)}"]
+    if module == SHIPPING or module in seen:
+        return []
+    seen.add(module)
+    tree = _module_tree(module)
+    if tree is None or not _self_ships(tree):
+        return [f"{module} does not ship_module itself"]
+    return [
+        f"{module} imports {why}"
+        for dep in sorted(set(_import_targets(tree).values()))
+        for why in _runner_safe(dep, seen)
+    ]
+
+
+def _runner_methods(tree: ast.AST) -> list[ast.FunctionDef]:
+    """Methods of the module's DataSource / reader / partition
+    classes (bases resolved through the module's own classes too)."""
+    classes = {n.name: n for n in tree.body if isinstance(n, ast.ClassDef)}
+    runner: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for name, c in classes.items():
+            bases = {ast.unparse(b).split(".")[-1] for b in c.bases}
+            if name not in runner and bases & (RUNNER_BASES | runner):
+                runner.add(name)
+                grew = True
+    return [
+        f
+        for name in sorted(runner)
+        for f in classes[name].body
+        if isinstance(f, ast.FunctionDef)
+    ]
+
+
+def _runner_references(module: str) -> dict[str, set[str]]:
+    """Every name the runner-side code of ``module`` references that
+    is not defined in the module itself -> the modules it resolves to
+    (``{"<unresolved>"}`` for names bound nowhere). Module-level
+    functions and classes those methods reach are followed too."""
+    import builtins
+
+    tree = _module_tree(module)
+    top_defs = {
+        n.name: n
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+    }
+    top_vars = {
+        t.id
+        for n in tree.body
+        if isinstance(n, (ast.Assign, ast.AnnAssign))
+        for t in (n.targets if isinstance(n, ast.Assign) else [n.target])
+        if isinstance(t, ast.Name)
+    }
+    imports = {
+        k: v
+        for n in tree.body
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        for k, v in _import_targets(n).items()
+    }
+    out: dict[str, set[str]] = {}
+    todo: list[ast.AST] = list(_runner_methods(tree))
+    done: set[int] = set()
+    while todo:
+        fn = todo.pop()
+        if id(fn) in done:
+            continue
+        done.add(id(fn))
+        if isinstance(fn, ast.ClassDef):
+            todo += [f for f in fn.body if isinstance(f, ast.FunctionDef)]
+            continue
+        # imports inside the function body resolve too
+        for name, mod in _import_targets(fn).items():
+            out.setdefault(name, set()).add(mod)
+        handlers = {
+            h.name
+            for h in ast.walk(fn)
+            if isinstance(h, ast.ExceptHandler) and h.name
+        }
+        for name in _free_names(fn) - handlers:
+            if name in top_defs:
+                todo.append(top_defs[name])
+            elif name in imports:
+                out.setdefault(name, set()).add(imports[name])
+            elif name not in top_vars and not hasattr(builtins, name):
+                out.setdefault(name, set()).add("<unresolved>")
+    return out
+
+
+def _runner_offenders(module: str) -> list[str]:
+    offenders = []
+    tree = _module_tree(module)
+    if not _self_ships(tree):
+        offenders.append(f"{module} does not ship_module itself")
+    for name, mods in sorted(_runner_references(module).items()):
+        for mod in sorted(mods):
+            why = (
+                ["bound nowhere in the module"]
+                if mod == "<unresolved>"
+                else _runner_safe(mod, set())
+            )
+            offenders += [f"{module}: {name} -> {w}" for w in why]
+    return offenders
+
+
+def test_datasource_runner_reaches_only_shipped_modules():
+    """Every name referenced from DataSource / reader / partition
+    methods (and the module-level helpers they call) resolves to the
+    standard library, pyspark, pandas or pyarrow, or to an in-package
+    module that ship_modules itself with no unshipped in-package
+    import. In-repo tests cannot see a violation at runtime (their
+    workers import the package from the repo root); an external-cwd
+    driver gets ModuleNotFoundError in the runner."""
+    offenders = [o for m in RUNNER_MODULES for o in _runner_offenders(m)]
+    assert not offenders, "\n".join(offenders)
+    # the shared manifest rules are what the table sources reach
+    refs = _runner_references("video_streamer_spark.sources.cdf_source")
+    assert "video_streamer_spark.operators.manifest" in set().union(
+        *refs.values()
     )

@@ -2965,6 +2965,32 @@ def test_session_cache_footprint_is_bounded_across_repeats(spark):
     )
 
 
+def test_round_pools_evicted_at_entry(spark):
+    """Per-round persist pools (``pagerank-r{it}``) are evicted by
+    site at entry: reuse alone evicts only same-named pools, so a
+    6-round call followed by a 2-round call used to leave rounds 1-4
+    of the first call cached."""
+    from video_streamer_spark.operators.dedup import pagerank_iterations
+
+    nodes = spark.range(0, 40).select(F.col("id").alias("node"))
+    edges = spark.range(0, 40).selectExpr(
+        "id AS src", "(id * 7 + 3) % 40 AS dst"
+    )
+    jsc = spark.sparkContext._jsc.sc()
+
+    def run(n_iter: int) -> int:
+        pagerank_iterations(nodes, edges, n_iter=n_iter).count()
+        return len(jsc.getRDDStorageInfo())
+
+    lone = run(2)
+    run(6)
+    after = run(2)
+    assert after <= lone, (
+        f"{after} cached tables after 6 then 2 rounds, {lone} after a "
+        "lone 2-round call: earlier rounds stayed cached"
+    )
+
+
 def test_brute_topk_guards_query_side(spark):
     """brute_topk broadcasts its whole query side — above
     max_query_rows it must refuse with a pointer to the ANN paths

@@ -47,6 +47,19 @@ def bounded_persist(df: DataFrame, pool: str) -> DataFrame:
     return df
 
 
+def evict_pools(prefix: str) -> None:
+    """Unpersist every pool whose name starts with ``prefix``. A site
+    that names its pools per round (``f"site-r{it}"``) calls this at
+    entry: reuse evicts only same-named pools, so a call with fewer
+    rounds would otherwise keep an earlier call's extra rounds cached."""
+    with _LOCK:
+        for name in [n for n in _POOLS if n.startswith(prefix)]:
+            try:
+                _POOLS.pop(name).unpersist()
+            except Exception:
+                pass  # session torn down between calls; nothing cached
+
+
 def pooled(pool: str):
     """Chain-friendly adapter: ``df.transform(pooled("site-name"))`` is
     ``bounded_persist(df, "site-name")`` without breaking a method

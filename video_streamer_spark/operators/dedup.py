@@ -37,7 +37,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from video_streamer_spark.catalog import scatter
-from video_streamer_spark.functions.caching import bounded_persist, pooled
+from video_streamer_spark.functions.caching import (
+    bounded_persist,
+    evict_pools,
+    pooled,
+)
 
 NUM_MINHASH = 8          # permutations (seeded md5 salts)
 MINHASH_BAND_ROWS = 2    # rows per LSH band → 4 bands
@@ -701,8 +705,7 @@ def pagerank_iterations(
     Values are unchanged (a cache stores exactly the rows the subtree
     computes, and an evicted cache recomputes the same lineage).
     """
-    from video_streamer_spark.functions.caching import bounded_persist
-
+    evict_pools("pagerank-r")
     edges = bounded_persist(edges, "pagerank-edges")
     nodes = bounded_persist(
         nodes.select(F.col(node_col).alias("node")), "pagerank-nodes"

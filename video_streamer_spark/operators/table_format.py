@@ -51,6 +51,7 @@ commit notion at all (one flush at EOS, gst-detection-tf.py:339-344)."""
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import math
 import os
@@ -65,6 +66,18 @@ from pyspark.sql import functions as F
 from video_streamer_spark.operators.log_store import (
     LogEntryExistsError,
     log_store_for,
+)
+from video_streamer_spark.operators.manifest import (
+    MANIFEST_DIR,
+    SAFE_WIDENINGS,
+    BucketLayoutChanged,
+    abs_ref,
+    buckets_changed_between,
+    changed_buckets_walk,
+    latest,
+    manifest_name,
+    version_at_timestamp as _resolve_timestamp,
+    versions,
 )
 from video_streamer_spark.operators.merge import (
     BUCKET_COL,  # the bucket column _bucketed emits — must stay shared
@@ -125,42 +138,23 @@ class VersionVacuumedError(RuntimeError):
     the version is older than the table's retention window. Raised by
     time travel and ``table_changes`` so a reader can tell "history
     traded for space, pick a retained version" apart from a genuinely
-    corrupt table (raw FileNotFoundError). The streaming twin is the
-    table_cdf reader's named start-offset-vacuumed error
+    corrupt table (raw FileNotFoundError). The stream's counterpart is
+    the table_cdf reader's named start-offset-vacuumed error
     (``sources/cdf_source.py``) — same contract: never read through a
     hole, always name the remedy."""
 
 
 def _manifest_dir(path: str) -> str:
-    return os.path.join(path, "_manifests")
-
-
-def _abs_ref(path: str, rel: str) -> str:
-    """Resolve a manifest data ref to a filesystem path. Refs this
-    table wrote are table-relative (``data/commit-.../pb=N``); a
-    SHALLOW CLONE's manifest (``clone_table``) instead carries
-    ABSOLUTE refs into its source table's layout — zero bytes copied,
-    the clone owns metadata only until copy-on-write gives it local
-    dirs. Every consumer of ``doc["buckets"]`` / ``doc["tombstones"]``
-    refs must resolve through here; writers always mint relative refs
-    under their own table root."""
-    return rel if os.path.isabs(rel) else os.path.join(path, rel)
+    return os.path.join(path, MANIFEST_DIR)
 
 
 def history(path: str) -> list[int]:
     """Committed versions, ascending. A manifest file IS a commit."""
-    return sorted(
-        int(f.removeprefix("v").removesuffix(".json"))
-        for f in log_store_for(path).list_entries(_manifest_dir(path))
-        if f.startswith("v") and f.endswith(".json")
-    )
+    return versions(log_store_for(path).list_entries(_manifest_dir(path)))
 
 
 def current_version(path: str) -> int:
-    versions = history(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed version at {path}")
-    return versions[-1]
+    return latest(history(path), path)
 
 
 def _read_entry_trusting_list(store, mdir: str, name: str) -> str:
@@ -183,7 +177,7 @@ def _read_entry_trusting_list(store, mdir: str, name: str) -> str:
 def _read_manifest(path: str, version: int) -> dict:
     return json.loads(
         _read_entry_trusting_list(
-            log_store_for(path), _manifest_dir(path), f"v{version:09d}.json"
+            log_store_for(path), _manifest_dir(path), manifest_name(version)
         )
     )
 
@@ -246,7 +240,7 @@ def _commit_manifest(path: str, version: int, doc: dict) -> None:
     payload = json.dumps(doc)
     try:
         log_store_for(path).put_if_absent(
-            _manifest_dir(path), f"v{version:09d}.json", payload
+            _manifest_dir(path), manifest_name(version), payload
         )
     except LogEntryExistsError as exc:
         try:
@@ -256,7 +250,7 @@ def _commit_manifest(path: str, version: int, doc: dict) -> None:
             existing = _read_entry_trusting_list(
                 log_store_for(path),
                 _manifest_dir(path),
-                f"v{version:09d}.json",
+                manifest_name(version),
             )
         except OSError:
             existing = None
@@ -266,24 +260,6 @@ def _commit_manifest(path: str, version: int, doc: dict) -> None:
             f"version v{version} at {path} was committed by another "
             "writer; re-read the table and re-apply the changeset"
         ) from exc
-
-
-def _buckets_changed_between(a: dict, b: dict) -> set[str]:
-    """Bucket ids whose effective content differs between two manifests
-    of the SAME layout: a repointed data dir or a changed tombstone
-    list. Data dirs are immutable and commit-uuid-unique, so a pointer
-    can never revert — diffing the endpoints sees every bucket any
-    intermediate commit touched."""
-    out: set[str] = set()
-    ab, bb = a.get("buckets", {}), b.get("buckets", {})
-    for k in set(ab) | set(bb):
-        if ab.get(k) != bb.get(k):
-            out.add(k)
-    at, bt = a.get("tombstones", {}), b.get("tombstones", {})
-    for k in set(at) | set(bt):
-        if at.get(k) != bt.get(k):
-            out.add(k)
-    return out
 
 
 # Observability: how many conflict rebases have landed in this process
@@ -395,7 +371,7 @@ def _commit_with_rebase(
                     for k in ("cols", "m", "k")
                 }
                 and not (
-                    _buckets_changed_between(base_doc, cur)
+                    buckets_changed_between(base_doc, cur)
                     & (touched | (read_buckets or set()))
                 )
             )
@@ -978,7 +954,7 @@ def _read_buckets(
         else _col_mapping(doc)
     ) or {}
     dirs = [
-        _abs_ref(path, doc["buckets"][b])
+        abs_ref(path, doc["buckets"][b])
         for b in sorted(bucket_ids, key=int)
         if b in doc["buckets"]
     ]
@@ -1046,7 +1022,7 @@ def _minus_tombstones(
     broadcast if runtime stats allow)."""
     tombs = doc.get("tombstones", {})
     dirs = [
-        _abs_ref(path, rel)
+        abs_ref(path, rel)
         for b in bucket_ids
         for rel in tombs.get(str(b), [])
     ]
@@ -1263,7 +1239,7 @@ def read_table_where(
         ):
             continue  # bloom skip: value provably not in this bucket
         read_buckets.append(b)
-        bdir = _abs_ref(path, doc["buckets"][b])
+        bdir = abs_ref(path, doc["buckets"][b])
         fmap = fstats.get(b)
         if not fmap:  # pre-file-stats manifest → whole dir
             paths.append(bdir)
@@ -1472,20 +1448,15 @@ def table_changes(
     key_cols = doc_a["key_cols"]
     tomb_a = doc_a.get("tombstones", {})
     tomb_b = doc_b.get("tombstones", {})
-    endpoint_changed = {
-        b
-        for b in set(doc_a["buckets"])
-        | set(doc_b["buckets"])
-        | set(tomb_a)
-        | set(tomb_b)
-        if doc_a["buckets"].get(b) != doc_b["buckets"].get(b)
-        or tomb_a.get(b) != tomb_b.get(b)
-    }
+    endpoint_changed = buckets_changed_between(doc_a, doc_b)
     try:
         # manifest-chain walk: buckets repointed ONLY by layout_only
         # commits (optimize_table) hold identical rows and are skipped
         changed = sorted(
-            changed_buckets_between(path, v_from, v_to) & endpoint_changed
+            changed_buckets_walk(
+                v_from, v_to, functools.partial(_read_manifest, path)
+            )
+            & endpoint_changed
         )
     except (FileNotFoundError, BucketLayoutChanged):
         # vacuumed intermediate manifest, or the window spans a
@@ -1605,7 +1576,7 @@ def table_changes(
         )
     if tomb_only:
         delta_dirs = [
-            _abs_ref(path, rel)
+            abs_ref(path, rel)
             for b in tomb_only
             for rel in tomb_b.get(b, [])
             if rel not in set(tomb_a.get(b, []))
@@ -1899,21 +1870,6 @@ def add_column(path: str, name: str, ddl_type: str) -> int:
     return base_v + 1
 
 
-# Lossless widenings only (the Iceberg type-promotion set plus the
-# small-int ladder): every value representable in the old type is
-# exactly representable in the new, so old data files read under the
-# widened schema are value-identical (Spark's parquet reader upcasts
-# natively — probed on int32→int64/float32→float64 files). bigint →
-# double is deliberately ABSENT (lossy past 2^53), as is any
-# narrowing.
-_SAFE_WIDENINGS = {
-    "tinyint": {"smallint", "int", "bigint"},
-    "smallint": {"int", "bigint"},
-    "int": {"bigint"},
-    "float": {"double"},
-}
-
-
 def widen_column_type(path: str, name: str, new_type: str) -> int:
     """Schema evolution leg 3: widen a non-key column's type as a
     METADATA-ONLY commit (Iceberg's type promotion / Delta's type
@@ -1921,7 +1877,7 @@ def widen_column_type(path: str, name: str, new_type: str) -> int:
     schema explicitly and Spark's parquet scan upcasts old files'
     narrower physical values natively; buckets rewritten later
     materialize the wide type. Only the lossless ladder is legal
-    (``_SAFE_WIDENINGS``); narrowing and lossy pairs refuse.
+    (``SAFE_WIDENINGS``); narrowing and lossy pairs refuse.
 
     Key columns refuse: the key hash IS the physical layout and
     ``xxhash64`` is type-sensitive, so widening a key would re-route
@@ -1965,10 +1921,10 @@ def widen_column_type(path: str, name: str, new_type: str) -> int:
     new = target.simpleString()
     if new == old:
         return base_v  # retry of our own durable widening: converge
-    if new not in _SAFE_WIDENINGS.get(old, set()):
+    if new not in SAFE_WIDENINGS.get(old, set()):
         raise ValueError(
             f"widening {old} -> {new} is not lossless; legal "
-            f"promotions: {_SAFE_WIDENINGS}"
+            f"promotions: {SAFE_WIDENINGS}"
         )
     new_schema = StructType(
         [
@@ -2538,7 +2494,11 @@ def merge_into(
             "changes to one target row is non-deterministic. "
             "Pre-aggregate the source to one row per key."
         )
-    target = _read_routed(spark, path, doc, route)
+    # no semi join against the source keys here (unlike
+    # ``_read_routed``): the left join below already drops target rows
+    # no source key matches, and the semi join would evaluate the
+    # source once more per commit
+    target = _read_buckets(spark, path, doc, route.wanted)
     # The classification READ set: every bucket any source key routes
     # to, bloom-vetoed or not. Passed to the commit so rebase
     # eligibility re-validates the pinned-snapshot classification
@@ -2913,34 +2873,15 @@ def restore_table(path: str, version: int) -> int:
 
 
 def version_at_timestamp(path: str, ts: float) -> int:
-    """Resolve ``TIMESTAMP AS OF``: the LATEST retained version whose
-    ``committed_at`` is ≤ ``ts`` (Delta's rule). Metadata-only — one
-    manifest read per retained version.
-
-    Loud edges: a timestamp before the oldest retained commit raises
-    (there is no state to serve — the honest answer after vacuum too);
-    a retained manifest WITHOUT a stamp (written before this feature)
-    raises by name rather than guessing its age. Wall-clock skew
-    between writers can make stamps locally non-monotonic; taking the
-    max qualifying VERSION (not the max timestamp) keeps resolution
-    deterministic and supremum-correct under skew."""
-    best = None
-    for v in history(path):
-        at = _read_manifest(path, v).get("committed_at")
-        if at is None:
-            raise ValueError(
-                f"version {v} at {path} has no committed_at stamp "
-                "(written before timestamp support): TIMESTAMP AS OF "
-                "cannot resolve against it — use VERSION AS OF"
-            )
-        if at <= ts:
-            best = v
-    if best is None:
-        raise ValueError(
-            f"no retained version at {path} is as old as timestamp "
-            f"{ts} (oldest retained commit is newer, or was vacuumed)"
-        )
-    return best
+    """Resolve ``TIMESTAMP AS OF`` against the table's retained log
+    (``manifest.version_at_timestamp`` holds the rule)."""
+    return _resolve_timestamp(
+        history(path),
+        functools.partial(_read_manifest, path),
+        ts,
+        path,
+        "TIMESTAMP AS OF cannot resolve against it — use VERSION AS OF",
+    )
 
 
 def clone_table(
@@ -2960,7 +2901,7 @@ def clone_table(
     Copy-on-write from then on: any merge/delete/OPTIMIZE on the clone
     writes its rewritten buckets under the CLONE's own ``data/`` and
     repoints just those entries; untouched buckets keep referencing
-    the source (``_abs_ref`` resolves both shapes everywhere).
+    the source (``abs_ref`` resolves both shapes everywhere).
     Mutating the SOURCE after the clone cannot affect it — source
     commits mint fresh dirs and the clone's refs pin the old immutable
     ones.
@@ -2986,11 +2927,11 @@ def clone_table(
     new_doc = dict(doc)
     new_doc["version"] = 1
     new_doc["buckets"] = {
-        b: _abs_ref(src_path, rel) for b, rel in doc["buckets"].items()
+        b: abs_ref(src_path, rel) for b, rel in doc["buckets"].items()
     }
     if doc.get("tombstones"):
         new_doc["tombstones"] = {
-            b: [_abs_ref(src_path, r) for r in refs]
+            b: [abs_ref(src_path, r) for r in refs]
             for b, refs in doc["tombstones"].items()
         }
     new_doc.pop("txns", None)
@@ -3249,65 +3190,6 @@ def optimize_table(
     return base_v + 1
 
 
-class BucketLayoutChanged(Exception):
-    """The version window spans a ``rebucket_table`` commit: the bucket
-    COUNT changed, so key→bucket assignment differs between manifests
-    and bucket ids are not comparable across the window. Callers must
-    fall back to a key-level (global) diff."""
-
-
-def changed_buckets_between(path: str, v_from: int, v_to: int) -> set[str]:
-    """Buckets that MAY contain a changed row in (v_from, v_to]: walk
-    the manifest chain and collect pointer changes introduced by
-    non-layout commits. A bucket rewritten only by ``optimize_table``
-    (``layout_only`` manifests) holds byte-different files with
-    identical rows, so skipping it is exact — and the walk is pure
-    JSON, so an OPTIMIZE of a 100 TB table costs its CDC readers a
-    metadata scan, not a full-table diff.
-
-    Raises ``BucketLayoutChanged`` if ``n_buckets`` varies anywhere in
-    the window (a ``rebucket_table`` commit) AND some non-layout commit
-    changed rows: bucket ids then name DIFFERENT key partitions in
-    different manifests, so a bucket-id set would be meaningless —
-    comparing ids across the two layouts emits false inserts/deletes
-    and can silently drop real changes. A window whose only commits
-    are layout_only still returns the exact empty set (rows identical
-    end to end), keeping rebucket/OPTIMIZE zero-read for the feed."""
-    cur = (
-        {"buckets": {}} if v_from == 0 else _read_manifest(path, v_from)
-    )
-    anchor_n = cur.get("n_buckets")
-    varied = False
-    changed: set[str] = set()
-    for v in range(v_from + 1, v_to + 1):
-        nxt = _read_manifest(path, v)
-        if anchor_n is None:
-            anchor_n = nxt.get("n_buckets")
-        elif nxt.get("n_buckets") != anchor_n:
-            varied = True
-        if not nxt.get("layout_only"):
-            for b in set(cur["buckets"]) | set(nxt["buckets"]):
-                if cur["buckets"].get(b) != nxt["buckets"].get(b):
-                    changed.add(b)
-            # a delete_keys commit changes rows WITHOUT repointing the
-            # bucket dir: the tombstone list is part of the bucket's
-            # effective contents (a layout commit folding tombstones is
-            # row-identical, hence still skipped above)
-            ta = cur.get("tombstones", {})
-            tb = nxt.get("tombstones", {})
-            for b in set(ta) | set(tb):
-                if ta.get(b) != tb.get(b):
-                    changed.add(b)
-        cur = nxt
-    if varied and changed:
-        raise BucketLayoutChanged(
-            f"n_buckets changed within versions ({v_from}, {v_to}] of "
-            f"{path} alongside data commits: bucket ids are not "
-            "comparable across the window"
-        )
-    return changed
-
-
 def rebucket_table(
     spark: SparkSession, path: str, new_n_buckets: int
 ) -> int:
@@ -3446,7 +3328,7 @@ def vacuum(
     doomed_versions = [v for v in versions if v not in keep]
     if not dry_run:
         for v in doomed_versions:
-            store.delete_entry(_manifest_dir(path), f"v{v:09d}.json")
+            store.delete_entry(_manifest_dir(path), manifest_name(v))
             dropped_manifests += 1
         # crashed writers may strand store-private staging files (the
         # POSIX store's .tmp-*.json between link and unlink, ADVICE
@@ -3566,7 +3448,7 @@ def analyze_table(path: str, version: int | None = None) -> dict:
     fstats = doc.get("file_stats", {})
     buckets: dict = {}
     for b, rel in doc["buckets"].items():
-        full = _abs_ref(path, rel)
+        full = abs_ref(path, rel)
         try:
             sizes = [
                 os.path.getsize(os.path.join(full, f))

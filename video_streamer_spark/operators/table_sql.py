@@ -104,6 +104,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from video_streamer_spark.operators.manifest import parse_ts_option
 from video_streamer_spark.operators.table_format import (
     _read_retained_manifest,
     _read_routed,
@@ -584,26 +585,17 @@ def _merge(
     return _version_df(spark, v)
 
 
-def _parse_ts(text: str) -> float:
-    """'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' (naive = UTC) or a raw unix
-    epoch number → epoch seconds."""
-    from datetime import datetime, timezone
-
-    t = text.strip()
+def _timestamp_version(path: str, text: str) -> int:
+    """``TIMESTAMP AS OF '<text>'`` → the version it pins; the text is
+    ISO-8601 (naive = UTC) or epoch seconds."""
     try:
-        return float(t)
-    except ValueError:
-        pass
-    try:
-        dt = datetime.fromisoformat(t)
+        ts = parse_ts_option(text)
     except ValueError:
         raise TableSqlError(
             f"unparseable timestamp {text!r}: use ISO-8601 "
             "('2026-01-01 12:00:00', naive = UTC) or epoch seconds"
         ) from None
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return dt.timestamp()
+    return version_at_timestamp(path, ts)
 
 
 def _select(
@@ -646,7 +638,7 @@ def _select(
             m = tail.search(segs[i])
             if m:
                 ts = segs[i + 1][1:-1].replace("''", "'")
-                v = version_at_timestamp(path, _parse_ts(ts))
+                v = _timestamp_version(path, ts)
                 segs[i] = segs[i][: m.start()] + _view_for(name, path, v)
                 segs[i + 1] = ""
     # pass 2 — VERSION AS OF pins and bare references, per segment
@@ -1025,7 +1017,7 @@ def _create(
                 "CREATE is version 1, never a replace"
             )
         v = (
-            version_at_timestamp(src, _parse_ts(cm.group(4)))
+            _timestamp_version(src, cm.group(4))
             if cm.group(4)
             else (int(cm.group(3)) if cm.group(3) else None)
         )
@@ -1208,7 +1200,7 @@ def table_sql(
             )
         path = _resolve(tables, m.group(1))
         v = (
-            version_at_timestamp(path, _parse_ts(m.group(3)))
+            _timestamp_version(path, m.group(3))
             if m.group(3)
             else int(m.group(2))
         )

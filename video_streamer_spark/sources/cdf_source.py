@@ -2,7 +2,7 @@
 Python ``DataSource`` (format ``"table_cdf"``) that tails
 ``operators/table_format.py`` commits with Structured Streaming —
 ``spark.readStream.format("table_cdf").option("path", t)`` — the
-read-side twin of ``run_acid_merge_sink``, and the Spark-4-native
+read-side counterpart of ``run_acid_merge_sink``, and the Spark-4-native
 analog of Delta's ``readChangeFeed`` stream.
 
 Design for scale:
@@ -40,9 +40,8 @@ change capture at all — its sink writes once at EOS
 
 from __future__ import annotations
 
-import datetime
+import functools
 import json
-import os
 import sys
 from collections.abc import Iterator, Sequence
 
@@ -59,6 +58,21 @@ from pyspark.sql.types import (
 )
 
 from video_streamer_spark.functions.shipping import ship_module
+from video_streamer_spark.operators.manifest import (
+    SAFE_WIDENINGS,
+    BucketLayoutChanged,
+    abs_ref,
+    arrow_schema,
+    buckets_changed_between,
+    changed_buckets_walk,
+    dead_mask,
+    file_versions,
+    latest,
+    parse_ts_option,
+    read_live,
+    read_manifest_file,
+    version_at_timestamp,
+)
 
 ship_module(sys.modules[__name__])
 
@@ -107,136 +121,6 @@ def signed_contribution():
     )
 
 
-# These three helpers DUPLICATE table_format's manifest accessors on
-# purpose: every DataSource method — schema(), streamReader(),
-# partitions(), read() — executes in Spark's Python data-source RUNNER
-# process, which does not have this repo on sys.path when the consumer
-# runs from an external cwd. An import of
-# video_streamer_spark.operators.table_format from any of them raises
-# ModuleNotFoundError there (caught live by the external-cwd verify
-# drive; in-repo tests cannot see it because their cwd is the repo
-# root). ship_module pickles THIS module by value, so everything it
-# needs must be self-contained (stdlib + pandas/pyarrow only). Keep in
-# lockstep with table_format._read_manifest / current_version /
-# changed_buckets_between — tests/test_table_format.py exercises both
-# sides against the same tables.
-
-
-def _load_manifest(path: str, version: int) -> dict:
-    with open(
-        os.path.join(path, "_manifests", f"v{version:09d}.json")
-    ) as fh:
-        return json.load(fh)
-
-
-def _abs_ref(path: str, rel: str) -> str:
-    """Resolve a manifest data ref (keep in lockstep with
-    table_format._abs_ref): table-relative for dirs this table wrote,
-    ABSOLUTE for a shallow clone's source-table refs. Self-contained
-    (stdlib only) — this runs in the DataSource runner process."""
-    return rel if os.path.isabs(rel) else os.path.join(path, rel)
-
-
-def _latest_version(path: str) -> int:
-    mdir = os.path.join(path, "_manifests")
-    versions = [
-        int(f.removeprefix("v").removesuffix(".json"))
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no committed version at {path}")
-    return max(versions)
-
-
-def _version_at_timestamp(path: str, ts: float) -> int:
-    """Latest retained version with ``committed_at`` ≤ ts — a local
-    copy of table_format.version_at_timestamp's rule, because this
-    module runs in the DataSource RUNNER process and must stay
-    self-contained (stdlib only; the round-7 verify gotcha)."""
-    mdir = os.path.join(path, "_manifests")
-    versions = sorted(
-        int(f.removeprefix("v").removesuffix(".json"))
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-    best = None
-    for v in versions:
-        at = _load_manifest(path, v).get("committed_at")
-        if at is None:
-            raise ValueError(
-                f"version {v} at {path} has no committed_at stamp "
-                "(written before timestamp support): use "
-                "startingVersion instead of startingTimestamp"
-            )
-        if at <= ts:
-            best = v
-    if best is None:
-        raise ValueError(
-            f"no retained version at {path} is as old as timestamp "
-            f"{ts} (oldest retained commit is newer, or was vacuumed)"
-        )
-    return best
-
-
-def _parse_ts_option(text: str) -> float:
-    """ISO-8601 (naive = UTC) or epoch seconds → epoch seconds."""
-    from datetime import datetime, timezone
-
-    t = str(text).strip()
-    try:
-        return float(t)
-    except ValueError:
-        pass
-    dt = datetime.fromisoformat(t)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return dt.timestamp()
-
-
-class _BucketLayoutChanged(Exception):
-    """The window spans a rebucket_table commit (n_buckets varies), so
-    bucket ids are not comparable across it — self-contained twin of
-    ``table_format.BucketLayoutChanged``."""
-
-
-def _changed_buckets_walk(path: str, v_from: int, v_to: int) -> set:
-    """Buckets repointed by at least one NON-layout commit in
-    (v_from, v_to] — self-contained twin of
-    ``table_format.changed_buckets_between`` (see the note above).
-    Raises ``_BucketLayoutChanged`` when ``n_buckets`` varies in the
-    window AND a non-layout commit changed rows: the collected ids
-    would name different key partitions in different manifests. A
-    layout-only window still returns the exact empty set."""
-    cur = {"buckets": {}} if v_from == 0 else _load_manifest(path, v_from)
-    anchor_n = cur.get("n_buckets")
-    varied = False
-    changed: set = set()
-    for v in range(v_from + 1, v_to + 1):
-        nxt = _load_manifest(path, v)
-        if anchor_n is None:
-            anchor_n = nxt.get("n_buckets")
-        elif nxt.get("n_buckets") != anchor_n:
-            varied = True
-        if not nxt.get("layout_only"):
-            for b in set(cur["buckets"]) | set(nxt["buckets"]):
-                if cur["buckets"].get(b) != nxt["buckets"].get(b):
-                    changed.add(b)
-            # delete_keys changes rows without repointing the bucket:
-            # its tombstone list is part of the effective contents
-            ta, tb = cur.get("tombstones", {}), nxt.get("tombstones", {})
-            for b in set(ta) | set(tb):
-                if ta.get(b) != tb.get(b):
-                    changed.add(b)
-        cur = nxt
-    if varied and changed:
-        raise _BucketLayoutChanged(
-            f"n_buckets changed within ({v_from}, {v_to}] alongside "
-            "data commits"
-        )
-    return changed
-
-
 def _converter(dt):
     """Scalar converter from a pandas cell to the declared Spark type —
     outer merges upcast int64 columns with absent rows to float64, so
@@ -252,23 +136,10 @@ def _converter(dt):
         return lambda v: bool(v)
     if s == "binary":
         return lambda v: bytes(v)
-    if s == "timestamp":
-        # an INSTANT column: Spark writes the UTC micros, but pyarrow
-        # reads the (INT96) value as a NAIVE wall time, and a naive
-        # datetime crossing the DataSource boundary is reinterpreted
-        # in the CONSUMER session's timezone — every instant would
-        # shift by the session offset for any non-UTC consumer (review
-        # r8). Stamp UTC on naive values; already-aware values (int64
-        # isAdjustedToUTC files) pass through.
-        def _to_utc_instant(v):
-            v = v.to_pydatetime() if hasattr(v, "to_pydatetime") else v
-            if isinstance(v, datetime.datetime) and v.tzinfo is None:
-                return v.replace(tzinfo=datetime.timezone.utc)
-            return v
-
-        return _to_utc_instant
-    if s in ("date", "timestamp_ntz"):
-        # wall-clock types: naive is CORRECT (no instant to preserve)
+    if s in ("date", "timestamp", "timestamp_ntz"):
+        # instants arrive UTC-stamped (``manifest.arrow_type``), so a
+        # consumer session in any timezone reads the same instant;
+        # wall-clock types stay naive (no instant to preserve)
         return lambda v: v.to_pydatetime() if hasattr(v, "to_pydatetime") else v
 
     # nested payload columns (round-13 VERDICT item 2): cells arrive as
@@ -431,13 +302,13 @@ class _CdfStreamReader(DataSourceStreamReader):
         return {"v": self.start_version}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        return {"v": _latest_version(self.path)}
+        return {"v": latest(file_versions(self.path), self.path)}
 
     def partitions(  # noqa: N802
         self, start: dict, end: dict
     ) -> Sequence[InputPartition]:
         try:
-            doc_b = _load_manifest(self.path, end["v"])
+            doc_b = read_manifest_file(self.path, end["v"])
         except FileNotFoundError as exc:
             # a restarted stream REPLAYS its last WAL'd batch before
             # planning new ones — if vacuum dropped that batch's end
@@ -498,20 +369,12 @@ class _CdfStreamReader(DataSourceStreamReader):
                 json.loads(doc_b["schema"])
             ).fields
         }
-        # declared-can-represent-current map (lockstep with
-        # table_format._SAFE_WIDENINGS; self-contained — runner rule)
-        safe_wide = {
-            "tinyint": {"smallint", "int", "bigint"},
-            "smallint": {"int", "bigint"},
-            "int": {"bigint"},
-            "float": {"double"},
-        }
         retyped = sorted(
             n
             for n, cur in current_types.items()
             if n in declared_types
             and declared_types[n] != cur
-            and declared_types[n] not in safe_wide.get(cur, set())
+            and declared_types[n] not in SAFE_WIDENINGS.get(cur, set())
         )
         if retyped:
             raise RuntimeError(
@@ -523,7 +386,7 @@ class _CdfStreamReader(DataSourceStreamReader):
             doc_a = (
                 None
                 if start["v"] == 0
-                else _load_manifest(self.path, start["v"])
+                else read_manifest_file(self.path, start["v"])
             )
         except FileNotFoundError as exc:
             # the checkpointed start offset's manifest was vacuumed out
@@ -542,25 +405,21 @@ class _CdfStreamReader(DataSourceStreamReader):
         buckets_b = doc_b["buckets"]
         tombs_a = {} if doc_a is None else doc_a.get("tombstones", {})
         tombs_b = doc_b.get("tombstones", {})
-        candidates = {
-            b
-            for b in set(buckets_a) | set(buckets_b) | set(tombs_a)
-            | set(tombs_b)
-            # immutable dir, same pointer AND same tombstone list → no
-            # changed effective row
-            if buckets_a.get(b) != buckets_b.get(b)
-            or tombs_a.get(b) != tombs_b.get(b)
-        }
+        # immutable dir, same pointer AND same tombstone list → no
+        # changed effective row
+        candidates = buckets_changed_between(doc_a or {}, doc_b)
         try:
             # skip buckets repointed only by layout_only (OPTIMIZE /
             # rebucket) commits — identical rows, and diffing them
             # would turn a table-wide rewrite into a table-wide diff
             # for every CDC consumer. A rebucket-only window returns
             # the exact empty set here → zero partitions, zero reads.
-            candidates &= _changed_buckets_walk(
-                self.path, start["v"], end["v"]
+            candidates &= changed_buckets_walk(
+                start["v"],
+                end["v"],
+                functools.partial(read_manifest_file, self.path),
             )
-        except (FileNotFoundError, _BucketLayoutChanged):
+        except (FileNotFoundError, BucketLayoutChanged):
             # vacuumed chain, or the window mixes a rebucket with data
             # commits. Per-bucket endpoint pairing stays exact as long
             # as both ENDPOINTS share one layout (same n_buckets →
@@ -578,21 +437,21 @@ class _CdfStreamReader(DataSourceStreamReader):
                 return [
                     _CdfPartition(
                         [
-                            _abs_ref(self.path, d)
+                            abs_ref(self.path, d)
                             for d in buckets_a.values()
                         ],
                         [
-                            _abs_ref(self.path, d)
+                            abs_ref(self.path, d)
                             for d in buckets_b.values()
                         ],
                         end["v"],
                         old_tombs=[
-                            _abs_ref(self.path, r)
+                            abs_ref(self.path, r)
                             for refs in tombs_a.values()
                             for r in refs
                         ],
                         new_tombs=[
-                            _abs_ref(self.path, r)
+                            abs_ref(self.path, r)
                             for refs in tombs_b.values()
                             for r in refs
                         ],
@@ -601,19 +460,19 @@ class _CdfStreamReader(DataSourceStreamReader):
                 ]
         return [
             _CdfPartition(
-                [_abs_ref(self.path, buckets_a[b])]
+                [abs_ref(self.path, buckets_a[b])]
                 if b in buckets_a
                 else [],
-                [_abs_ref(self.path, buckets_b[b])]
+                [abs_ref(self.path, buckets_b[b])]
                 if b in buckets_b
                 else [],
                 end["v"],
                 old_tombs=[
-                    _abs_ref(self.path, r)
+                    abs_ref(self.path, r)
                     for r in tombs_a.get(b, [])
                 ],
                 new_tombs=[
-                    _abs_ref(self.path, r)
+                    abs_ref(self.path, r)
                     for r in tombs_b.get(b, [])
                 ],
                 mapping=doc_b.get("column_mapping"),
@@ -624,78 +483,28 @@ class _CdfStreamReader(DataSourceStreamReader):
     def read(self, partition: _CdfPartition) -> Iterator[tuple]:
         # task-side: two immutable dirs → pandas outer join on the key
         import pandas as pd
-        import pyarrow.parquet as pq
 
         names = [f.name for f in self.table_fields]
         convs = [_converter(f.dataType) for f in self.table_fields]
-        back = {p: l for l, p in (partition.mapping or {}).items()}
+        target = arrow_schema(self.table_fields)
         key_cols = self.key_cols
         vals = [c for c in names if c not in key_cols]
-        int_cols = [
-            f.name
-            for f in self.table_fields
-            if f.dataType.simpleString()
-            in ("tinyint", "smallint", "int", "bigint")
-        ]
+
+        def live(dirs, tomb_dirs):
+            # this side's effective rows: its dirs minus its manifest's
+            # tombstoned keys, the batch readers' merge-on-read rule
+            return read_live(
+                dirs, tomb_dirs, target, key_cols, partition.mapping
+            )
+
+        def frame(t):
+            # integral columns land directly in nullable Int* — never
+            # the lossy float64 detour a null-bearing int64 column
+            # would otherwise take
+            return t.to_pandas(types_mapper=_arrow_types_mapper)
 
         def load(dirs, tomb_dirs):
-            frames = []
-            for d in dirs:
-                # types_mapper: integral columns land directly in
-                # nullable Int* — never the lossy float64 detour a
-                # null-bearing int64 column would otherwise take
-                df = pq.read_table(d).to_pandas(
-                    types_mapper=_arrow_types_mapper
-                )
-                if back:
-                    # field-id mapping: a pre-drop file may carry dead
-                    # bytes under a remapped column's LOGICAL name —
-                    # drop those first (they must backfill NULL), then
-                    # surface the live physical columns as logical
-                    df = df.drop(
-                        columns=[
-                            c for c in df.columns if c in set(back.values())
-                        ],
-                        errors="ignore",
-                    ).rename(columns=back)
-                for c in names:  # null-backfill pre-evolution files
-                    if c not in df.columns:
-                        df[c] = None
-                frames.append(df[names])
-            df = (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=names)
-            )
-            # nullable Int64 for backfilled (object-dtype) columns too,
-            # so the outer merge keeps integral semantics end to end
-            for c in int_cols:
-                df[c] = df[c].astype("Int64")
-            if tomb_dirs and len(df):
-                # merge-on-read deletes: this side's effective rows are
-                # its dirs minus its manifest's tombstoned keys (same
-                # anti-join the batch readers apply). dropna on the
-                # dead keys: pandas merges MATCH NA==NA where Spark's
-                # equality never does — a null tombstone key must kill
-                # nothing and a null-keyed data row must survive, like
-                # the batch anti-join (review r8)
-                dead = pd.concat(
-                    [
-                        pq.read_table(d).to_pandas(
-                            types_mapper=_arrow_types_mapper
-                        )[key_cols]
-                        for d in tomb_dirs
-                    ],
-                    ignore_index=True,
-                ).drop_duplicates().dropna(subset=key_cols)
-                for c in key_cols:
-                    if c in int_cols:
-                        dead[c] = dead[c].astype("Int64")
-                marked = df[key_cols].merge(
-                    dead, on=key_cols, how="left", indicator=True
-                )
-                df = df[(marked["_merge"] == "left_only").to_numpy()]
-            return df[names]
+            return frame(live(dirs, tomb_dirs))
 
         def emit_frame(df, cols, change):
             for row in df[cols].itertuples(index=False, name=None):
@@ -715,29 +524,15 @@ class _CdfStreamReader(DataSourceStreamReader):
                 for d in partition.new_tombs
                 if d not in set(partition.old_tombs)
             ]
-            eff = load(partition.old_dirs, partition.old_tombs)
-            if not delta or not len(eff):
+            if not delta:
                 return
-            dead = pd.concat(
-                [
-                    pq.read_table(d).to_pandas(
-                        types_mapper=_arrow_types_mapper
-                    )[key_cols]
-                    for d in delta
-                ],
-                ignore_index=True,
-            ).drop_duplicates().dropna(subset=key_cols)
-            for c in key_cols:
-                if c in int_cols:
-                    dead[c] = dead[c].astype("Int64")
-            marked = eff[key_cols].merge(
-                dead, on=key_cols, how="left", indicator=True
-            )
-            yield from emit_frame(
-                eff[(marked["_merge"] == "both").to_numpy()],
-                names,
-                "delete",
-            )
+            eff = live(partition.old_dirs, partition.old_tombs)
+            if len(eff):
+                yield from emit_frame(
+                    frame(eff.filter(dead_mask(eff, delta, key_cols))),
+                    names,
+                    "delete",
+                )
             return
 
         # one-sided buckets are pure inserts / pure deletes — no join
@@ -846,9 +641,8 @@ class TableCdfDataSource(DataSource):
         return "table_cdf"
 
     def schema(self) -> StructType:
-        doc = _load_manifest(
-            self.options["path"], _latest_version(self.options["path"])
-        )
+        path = self.options["path"]
+        doc = read_manifest_file(path, latest(file_versions(path), path))
         table_schema = StructType.fromJson(json.loads(doc["schema"]))
         return StructType(
             list(table_schema.fields)
@@ -871,11 +665,17 @@ class TableCdfDataSource(DataSource):
             # the stream's first window begins AFTER the latest commit
             # at-or-before the timestamp — "resume from where the
             # table stood at time ts"
-            start = _version_at_timestamp(path, _parse_ts_option(raw_ts))
+            start = version_at_timestamp(
+                file_versions(path),
+                functools.partial(read_manifest_file, path),
+                parse_ts_option(raw_ts),
+                path,
+                "use startingVersion instead of startingTimestamp",
+            )
         else:
             raw = self.options.get("startingVersion", 0)
             start = (
-                _latest_version(path)
+                latest(file_versions(path), path)
                 if isinstance(raw, str) and raw.strip().lower() == "latest"
                 else int(raw)
             )
@@ -884,7 +684,7 @@ class TableCdfDataSource(DataSource):
             == "true"
         )
         reader = _CdfStreamReader(path, schema, start, preimages=preimages)
-        doc = _load_manifest(path, _latest_version(path))
+        doc = read_manifest_file(path, latest(file_versions(path), path))
         reader.key_cols = doc["key_cols"]
         return reader
 
@@ -924,7 +724,7 @@ def replicate_table(
         run_acid_merge_sink,
     )
 
-    dst_keys = _load_manifest(dst_path, current_version(dst_path))[
+    dst_keys = read_manifest_file(dst_path, current_version(dst_path))[
         "key_cols"
     ]
     feed = (
